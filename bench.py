@@ -23,6 +23,21 @@ import sys
 import time
 import traceback
 
+# Session recycle cadence, in timed executions (see _Sessions).
+RESTART_EVERY = 16
+# Queries whose first run takes at least MEDIAN_MIN_SEC re-run to
+# HEAVY_REPS samples in total and report the median; BUDGET_SEC caps
+# the wall time of those re-runs.
+MEDIAN_MIN_SEC = 1.0
+HEAVY_REPS = 3
+BUDGET_SEC = 1500.0
+# Line shaping (render_line): at most SPREAD_TOP spread entries, for
+# rows of at least SPREAD_MIN_SEC, in a line of at most LINE_BUDGET
+# bytes (the driver captures only the last ~2000 bytes of stdout).
+SPREAD_TOP = 64
+LINE_BUDGET = 1900
+SPREAD_MIN_SEC = 3.0
+
 
 def _alive(spark) -> bool:
     try:
@@ -122,92 +137,76 @@ def _anchor_query(spark, sf_dir: str):
     )
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
+class _Sessions:
+    """The bench's one live Spark session and every timed execution in
+    it. Recycle the session every RESTART_EVERY executions: one local
+    JVM accumulating 60+ queries' generated classes, broadcasts, and
+    shuffle state measures late queries 2-5x slower than the same
+    query in a fresh session (metaspace/GC pressure, not plan cost).
+    The reference's scripts each ran as their own process; a
+    periodically fresh session is the comparable condition. Restart
+    + warmup time is NOT counted against any query."""
 
-    from data_mining_map_reduce_spark.queries import SPARK_QUERIES
-    from data_mining_map_reduce_spark.session import get_spark
+    def __init__(self, sf_dir: str):
+        self.sf_dir = sf_dir
+        self.spark = self._start()
+        # sidecar-only, see _tree_cpu_sec; entries are None (JSON null)
+        # when the paired CPU reading was unusable (_cpu_delta)
+        self.cpu_sec: dict[str, list[float | None]] = {}
+        # sidecar-only (r14 verdict task 4): [session ordinal, 1-based
+        # execution index within that recycled JVM session] per sample,
+        # appended in lockstep with cpu_sec. A query's first
+        # executions in a fresh session measure codegen/JIT at 1.5-2x
+        # wall AND cpu (r14: betweenness 9.0 -> 4.9 -> 3.7 s consecutive
+        # in ONE session), and roster growth shifts every session
+        # boundary — so drift adjudication needs to know WHERE in its
+        # session each sample ran; scripts/bench_drift.py auto-annotates
+        # flags whose inflated samples are early-in-session.
+        self.positions: dict[str, list[list[int]]] = {}
+        self.session_idx = 0
+        self.since_restart = 0
 
-    spark = get_spark(app_name="bench")
+    def _start(self):
+        from data_mining_map_reduce_spark.queries import SPARK_QUERIES
+        from data_mining_map_reduce_spark.session import get_spark
 
-    # Warmup: JVM JIT + codegen + parquet footer caches.
-    try:
-        SPARK_QUERIES["flagship_category_avg"](spark, sf_dir).collect()
-    except Exception:
-        pass
+        spark = get_spark(app_name="bench")
+        # Warmup: JVM JIT + codegen + parquet footer caches.
+        try:
+            SPARK_QUERIES["flagship_category_avg"](spark, self.sf_dir).collect()
+            spark.catalog.clearCache()
+        except Exception:
+            pass
+        return spark
 
-    # anchor samples (open / middle / close — see _anchor_query);
-    # sidecar-only, never part of "queries" or the total
-    anchor_walls: list[float] = []
-    anchor_cpus: list[float | None] = []
+    def _restart(self) -> None:
+        try:
+            self.spark.stop()
+        except Exception:
+            pass
+        gc.collect()
+        self.spark = self._start()
 
-    def _run_anchor(s) -> None:
+    def timed(self, name: str, fn) -> tuple[float | None, str | None]:
+        """Run ``fn(spark, sf_dir).collect()`` once: (wall, None) on
+        success, (None, error) on failure — a failure never escapes,
+        and one that killed the JVM restarts the session."""
+        if self.since_restart >= RESTART_EVERY:
+            self.since_restart = 0
+            self.session_idx += 1
+            self._restart()
+        self.since_restart += 1
         t0 = time.perf_counter()
         c0 = _tree_cpu_sec()
         try:
-            _anchor_query(s, sf_dir).collect()
-            anchor_walls.append(round(time.perf_counter() - t0, 4))
-            anchor_cpus.append(_cpu_delta(c0, _tree_cpu_sec()))
-        except Exception as exc:  # noqa: BLE001 — anchor must not kill the run
-            print(f"[bench] anchor run failed: {exc}", file=sys.stderr)
-
-    _run_anchor(spark)  # session open
-
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    # sidecar-only, see _tree_cpu_sec; entries are None (JSON null)
-    # when the paired CPU reading was unusable (_cpu_delta)
-    cpu_samples: dict[str, list[float | None]] = {}
-    # sidecar-only (r14 verdict task 4): [session ordinal, 1-based
-    # execution index within that recycled JVM session] per sample,
-    # appended in lockstep with cpu_samples. A query's first
-    # executions in a fresh session measure codegen/JIT at 1.5-2x
-    # wall AND cpu (r14: betweenness 9.0 -> 4.9 -> 3.7 s consecutive
-    # in ONE session), and roster growth shifts every session
-    # boundary — so drift adjudication needs to know WHERE in its
-    # session each sample ran; scripts/bench_drift.py auto-annotates
-    # flags whose inflated samples are early-in-session.
-    positions: dict[str, list[list[int]]] = {}
-    session_idx = 0
-    # Recycle the session every RESTART_EVERY queries: one local JVM
-    # accumulating 60+ queries' generated classes, broadcasts, and
-    # shuffle state measures late queries 2-5x slower than the same
-    # query in a fresh session (metaspace/GC pressure, not plan cost).
-    # The reference's scripts each ran as their own process; a
-    # periodically fresh session is the comparable condition. Restart
-    # + warmup time is NOT counted against any query.
-    restart_every = int(os.environ.get("SPARK_GRAFT_BENCH_RESTART", "16"))
-    since_restart = 0
-    anchor_mid_at = len(SPARK_QUERIES) // 2
-    for qi, (name, fn) in enumerate(sorted(SPARK_QUERIES.items())):
-        if qi == anchor_mid_at:
-            _run_anchor(spark)  # session middle
-        if since_restart >= restart_every:
-            since_restart = 0
-            session_idx += 1
-            try:
-                spark.stop()
-            except Exception:
-                pass
-            gc.collect()
-            spark = get_spark(app_name="bench")
-            try:
-                SPARK_QUERIES["flagship_category_avg"](spark, sf_dir).collect()
-                spark.catalog.clearCache()
-            except Exception:
-                pass
-        since_restart += 1
-        t0 = time.perf_counter()
-        c0 = _tree_cpu_sec()
-        try:
-            fn(spark, sf_dir).collect()
-            timings[name] = round(time.perf_counter() - t0, 4)
-            cpu_samples.setdefault(name, []).append(
+            fn(self.spark, self.sf_dir).collect()
+            wall = round(time.perf_counter() - t0, 4)
+            self.cpu_sec.setdefault(name, []).append(
                 _cpu_delta(c0, _tree_cpu_sec())
             )
-            positions.setdefault(name, []).append([session_idx, since_restart])
+            self.positions.setdefault(name, []).append(
+                [self.session_idx, self.since_restart]
+            )
             # Several operators legitimately cache intermediates whose
             # lifetime is the caller's collect (SON partitions, CF
             # ratings, graph edge sets). Drop them so query N's leftovers
@@ -216,23 +215,60 @@ def main() -> None:
             # the matching broadcasts/shuffle state — without it, 60+
             # queries of leftovers pile up in the single local JVM and
             # late queries measure GC pressure, not their own plan.
-            spark.catalog.clearCache()
+            self.spark.catalog.clearCache()
             gc.collect()
+            return wall, None
         except Exception as exc:  # noqa: BLE001 — bench must survive anything
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+            err = f"{type(exc).__name__}: {exc}"[:300]
             print(
                 f"[bench] {name} FAILED after "
-                f"{time.perf_counter() - t0:.1f}s: {errors[name]}",
+                f"{time.perf_counter() - t0:.1f}s: {err}",
                 file=sys.stderr,
             )
             traceback.print_exc(file=sys.stderr)
-            if not _alive(spark):
+            if not _alive(self.spark):
                 print(f"[bench] JVM dead after {name}; restarting", file=sys.stderr)
-                try:
-                    spark.stop()
-                except Exception:
-                    pass
-                spark = get_spark(app_name="bench")
+                self._restart()
+            return None, err
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+
+    from data_mining_map_reduce_spark.queries import SPARK_QUERIES
+
+    sessions = _Sessions(sf_dir)
+
+    # anchor samples (open / middle / close — see _anchor_query);
+    # sidecar-only, never part of "queries" or the total
+    anchor_walls: list[float] = []
+    anchor_cpus: list[float | None] = []
+
+    def _run_anchor() -> None:
+        t0 = time.perf_counter()
+        c0 = _tree_cpu_sec()
+        try:
+            _anchor_query(sessions.spark, sf_dir).collect()
+            anchor_walls.append(round(time.perf_counter() - t0, 4))
+            anchor_cpus.append(_cpu_delta(c0, _tree_cpu_sec()))
+        except Exception as exc:  # noqa: BLE001 — anchor must not kill the run
+            print(f"[bench] anchor run failed: {exc}", file=sys.stderr)
+
+    _run_anchor()  # session open
+
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    anchor_mid_at = len(SPARK_QUERIES) // 2
+    for qi, (name, fn) in enumerate(sorted(SPARK_QUERIES.items())):
+        if qi == anchor_mid_at:
+            _run_anchor()  # session middle
+        wall, err = sessions.timed(name, fn)
+        if err is None:
+            timings[name] = wall
+        else:
+            errors[name] = err
 
     # Noise stabilization: shared-box variance polluted r4->r6
     # round-over-round comparisons (five r6 queries "regressed" 2-5x
@@ -249,12 +285,10 @@ def main() -> None:
     # list (pass 1 of everything, then pass 2), minutes apart, so at
     # most one of the three samples lands in any one burst. Sessions
     # recycle on execution count, same cadence as the first pass.
-    heavy_thresh = float(os.environ.get("SPARK_GRAFT_BENCH_MEDIAN_MIN_SEC", "1.0"))
-    heavy_reps = int(os.environ.get("SPARK_GRAFT_BENCH_HEAVY_REPS", "3"))
     heavy = [
         name
         for name in sorted(timings, key=timings.get, reverse=True)
-        if timings[name] >= heavy_thresh
+        if timings[name] >= MEDIAN_MIN_SEC
     ]
     # Global wall budget: a co-tenant burst can stretch a rep pass
     # 2-3x, and an external caller may kill a bench that runs too
@@ -263,59 +297,22 @@ def main() -> None:
     # of the samples it HAS (1 or 2), which degrades precision, not
     # the artifact.
     t_budget0 = time.perf_counter()
-    budget_sec = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500"))
     samples: dict[str, list[float]] = {name: [timings[name]] for name in heavy}
-    if heavy and heavy_reps > 1:
-        since_restart = restart_every  # force a fresh session up front
-        for _pass in range(heavy_reps - 1):
-            if time.perf_counter() - t_budget0 > budget_sec:
+    if heavy and HEAVY_REPS > 1:
+        sessions.since_restart = RESTART_EVERY  # force a fresh session up front
+        for _pass in range(HEAVY_REPS - 1):
+            if time.perf_counter() - t_budget0 > BUDGET_SEC:
                 break
             for name in heavy:
-                if time.perf_counter() - t_budget0 > budget_sec:
+                if time.perf_counter() - t_budget0 > BUDGET_SEC:
                     print(
-                        f"[bench] budget {budget_sec}s hit; skipping remaining re-runs",
+                        f"[bench] budget {BUDGET_SEC}s hit; skipping remaining re-runs",
                         file=sys.stderr,
                     )
                     break
-                if since_restart >= restart_every:
-                    since_restart = 0
-                    session_idx += 1
-                    try:
-                        spark.stop()
-                    except Exception:
-                        pass
-                    gc.collect()
-                    spark = get_spark(app_name="bench")
-                    try:
-                        SPARK_QUERIES["flagship_category_avg"](spark, sf_dir).collect()
-                        spark.catalog.clearCache()
-                    except Exception:
-                        pass
-                since_restart += 1
-                t0 = time.perf_counter()
-                c0 = _tree_cpu_sec()
-                try:
-                    SPARK_QUERIES[name](spark, sf_dir).collect()
-                    samples[name].append(round(time.perf_counter() - t0, 4))
-                    cpu_samples.setdefault(name, []).append(
-                        _cpu_delta(c0, _tree_cpu_sec())
-                    )
-                    positions.setdefault(name, []).append(
-                        [session_idx, since_restart]
-                    )
-                    spark.catalog.clearCache()
-                    gc.collect()
-                except Exception as exc:  # noqa: BLE001
-                    print(
-                        f"[bench] heavy re-run {name} failed: {exc}",
-                        file=sys.stderr,
-                    )
-                    if not _alive(spark):
-                        try:
-                            spark.stop()
-                        except Exception:
-                            pass
-                        spark = get_spark(app_name="bench")
+                wall, _err = sessions.timed(name, SPARK_QUERIES[name])
+                if wall is not None:
+                    samples[name].append(wall)
         for name in heavy:
             ss = sorted(samples[name])
             n = len(ss)
@@ -331,7 +328,7 @@ def main() -> None:
                 file=sys.stderr,
             )
 
-    _run_anchor(spark)  # session close
+    _run_anchor()  # session close
     if anchor_walls:
         print(f"[bench] anchor samples={anchor_walls}", file=sys.stderr)
 
@@ -344,59 +341,24 @@ def main() -> None:
     # script (the stdout line has a hard byte budget; the sidecar
     # doesn't).
     try:
-        # The committed BENCH_SPREAD.json is the OFFICIAL record; a
-        # smoke/debug run must not clobber it (it did once — the r13
-        # sidecar had to be restored by hand from git). Official path
-        # only for a full run at the official SF with NO bench-shaping
-        # env overrides (ADVICE r13: a smoke run at the default sf_dir
-        # with HEAVY_REPS=1 / RESTART / BUDGET_SEC set still produced
-        # non-official samples and overwrote the committed file);
-        # anything else lands in BENCH_SPREAD.local.json (gitignored).
-        # SPARK_GRAFT_BENCH_OFFICIAL=1 asserts the run SHOULD be
-        # official — but never overrides the conditions (r15, ADVICE):
-        # a forced run that fails them lands local with a loud notice.
-        # SPARK_GRAFT_BENCH_SIDECAR overrides the target outright.
-        shaping = [
-            v
-            for v in os.environ
-            if v.startswith("SPARK_GRAFT_BENCH_")
-            and v not in ("SPARK_GRAFT_BENCH_SIDECAR", "SPARK_GRAFT_BENCH_OFFICIAL")
-        ]
-        # OFFICIAL=1 exists to force the official path when the
-        # conditions genuinely hold but detection is in doubt — it is
-        # NOT licensed to commit incomparable samples (ADVICE r14: a
-        # stale exported OFFICIAL=1 plus a shaping var or a non-
-        # official sf_dir would clobber the committed sidecar with
-        # exactly what the guard was built to keep out). The sf_dir
-        # requirement is absolute; shaping vars under OFFICIAL=1
-        # downgrade to local with a loud notice naming them.
+        # The committed BENCH_SPREAD.json is the OFFICIAL record, written
+        # only by a run at the official SF; anything else (a smoke or
+        # debug run) lands in BENCH_SPREAD.local.json (gitignored) so it
+        # can never clobber the committed file.
         at_official_sf = os.path.realpath(sf_dir) == os.path.realpath(
             "/root/testdata/sf0.1"
         )
-        forced = os.environ.get("SPARK_GRAFT_BENCH_OFFICIAL") == "1"
-        if forced and (shaping or not at_official_sf):
-            print(
-                "[bench] SPARK_GRAFT_BENCH_OFFICIAL=1 OVERRIDDEN -> "
-                "local sidecar: "
-                + (
-                    f"shaping vars set {sorted(shaping)}"
-                    if shaping
-                    else f"sf_dir {sf_dir} is not the official SF"
-                ),
-                file=sys.stderr,
-            )
-        official = at_official_sf and not shaping
-        sidecar = os.environ.get("SPARK_GRAFT_BENCH_SIDECAR") or os.path.join(
+        sidecar = os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_SPREAD.json" if official else "BENCH_SPREAD.local.json",
+            "BENCH_SPREAD.json" if at_official_sf else "BENCH_SPREAD.local.json",
         )
         with open(sidecar, "w") as fh:
             json.dump(
                 {
                     "sf": sf,
                     "samples": samples,
-                    "cpu_sec": cpu_samples,
-                    "positions": positions,
+                    "cpu_sec": sessions.cpu_sec,
+                    "positions": sessions.positions,
                     "errors": errors,
                     # open/middle/close walls of the code-frozen
                     # calibration plan (_anchor_query) — the box-drift
@@ -412,7 +374,7 @@ def main() -> None:
           file=sys.stderr)
     print(render_line(timings, errors, sf, samples, anchor=anchor_walls))
     try:
-        spark.stop()
+        sessions.spark.stop()
     except Exception:
         pass
 
@@ -422,9 +384,9 @@ def render_line(
     errors: dict[str, str],
     sf: float | None,
     samples: dict[str, list[float]] | None = None,
-    spread_top: int | None = None,
-    budget: int | None = None,
-    spread_min_sec: float | None = None,
+    spread_top: int = SPREAD_TOP,
+    budget: int = LINE_BUDGET,
+    spread_min_sec: float = SPREAD_MIN_SEC,
     anchor: list[float] | None = None,
 ) -> str:
     """Render the single driver-facing JSON line.
@@ -467,14 +429,6 @@ def render_line(
     room to spare (r13 verdict task 5). The committed
     BENCH_SPREAD.json sidecar keeps full name-keyed samples — the
     line encoding only exists to squeeze the official artifact."""
-    if spread_top is None:
-        spread_top = int(os.environ.get("SPARK_GRAFT_BENCH_SPREAD_TOP", "64"))
-    if budget is None:
-        budget = int(os.environ.get("SPARK_GRAFT_BENCH_LINE_BUDGET", "1900"))
-    if spread_min_sec is None:
-        spread_min_sec = float(
-            os.environ.get("SPARK_GRAFT_BENCH_SPREAD_MIN_SEC", "3.0")
-        )
     total = round(sum(timings.values()), 2)
 
     def _num(x: float):

@@ -42,12 +42,6 @@ def stable_int(col: Column | str) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(FOLD_PRIME))
 
 
-def universal_hash(col: Column, i: int, m: int) -> Column:
-    """F7: h_i(x) = (a_i * fold(x) + b_i) mod m."""
-    a, b = hash_params(i, m)
-    return F.pmod(F.lit(a) * stable_int(col) + F.lit(b), F.lit(m))
-
-
 # A10 (MinHash signature) note: the per-row HOF expression form that
 # used to live here (num_hashes × array_min(transform(...))) exceeded
 # the codegen method budget and evaluated interpreted (~20× slower);

@@ -55,23 +55,3 @@ def word_ngrams(tokens: Column, n: int) -> Column:
             lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def char_ngrams(col: Column | str, n: int) -> Column:
-    """Character n-gram shingles of a string column (same short-input
-    guard as word_ngrams)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(
-        F.length(c) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(c) - F.lit(n - 1)),
-            lambda i: F.substring(c, i, n),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def year_of(col: Column | str) -> Column:
-    """F3: calendar year (reference slices ``date[0:4]`` of a string,
-    Assignment1/task1.py:18; engine uses the typed timestamp)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.year(c)

@@ -1,10 +1,11 @@
 """Dense-vector column expressions over array<float|double>.
 
-SURVEY.md §2.8 F9-F11. The reference computes Euclidean and
-Mahalanobis distances in Python loops (Assignment5/bfr.py:47-51,
-133-153) and Jaccard via Python sets (Assignment3/task1.py:84-88).
-Here each is a single codegen'd array expression — no Python in the
-hot path, vectorizable by Tungsten, and usable inside joins.
+SURVEY.md §2.8 F9, F11. The reference computes Euclidean distances
+in Python loops (Assignment5/bfr.py:47-51) and Jaccard via Python
+sets (Assignment3/task1.py:84-88). Here each is a single codegen'd
+array expression — no Python in the hot path, vectorizable by
+Tungsten, and usable inside joins. (F10, the diagonal Mahalanobis
+distance, is built inline by BFR in operators/clustering.py.)
 """
 
 from __future__ import annotations
@@ -47,16 +48,6 @@ def l2(a: Column | str, b: Column | str) -> Column:
             lambda acc, x: acc + x,
         )
     )
-
-
-def mahalanobis_diag(x: Column | str, centroid: Column | str, std: Column | str) -> Column:
-    """F10: Mahalanobis distance with diagonal covariance; a zero
-    std component falls back to divisor 1 (reference
-    Assignment5/bfr.py:133-153 does the same)."""
-    x, c, s = _c(x), _c(centroid), _c(std)
-    diff = F.zip_with(x, c, lambda xi, ci: xi - ci)
-    scaled = F.zip_with(diff, s, lambda d, si: d / F.when(si > 0, si).otherwise(F.lit(1.0)))
-    return F.sqrt(F.aggregate(scaled, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
 def jaccard(a: Column | str, b: Column | str) -> Column:

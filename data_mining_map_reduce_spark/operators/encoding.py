@@ -30,11 +30,6 @@ def dictionary_encode(df: DataFrame, col: str, id_alias: str = "id") -> DataFram
     )
 
 
-def encode_column(df: DataFrame, col: str, dictionary: DataFrame, id_alias: str) -> DataFrame:
-    """Replace ``col`` with its dictionary id via broadcast join."""
-    return df.join(F.broadcast(dictionary), col).drop(col)
-
-
 def dictionary_encode_big(
     df: DataFrame, col: str, id_alias: str = "id", partitions: int | None = None
 ) -> DataFrame:

@@ -20,7 +20,7 @@ Scale notes per operator:
   locally assembled adjacency dict. This matches the reference's
   operating envelope (A4 graphs: thousands of vertices) and documents
   its memory bound: adjacency must fit one task. Beyond that, use
-  sampled-root approximate betweenness (same code, roots=sample).
+  sampled-root approximate betweenness (same code, ``n_roots=k``).
 """
 
 from __future__ import annotations
@@ -356,7 +356,6 @@ def grouped_adjacency(edges: DataFrame) -> DataFrame:
 
 def edge_betweenness(
     edges: DataFrame,
-    sample_fraction: float | None = None,
     seed: int = 7,
     num_batches: int | None = None,
     adjacency: DataFrame | None = None,
@@ -382,9 +381,6 @@ def edge_betweenness(
     count only, not quadratic-family (the r12 sf10 receipt measured
     the fractional knob at 9.2x/decade because |roots| grew with V;
     a fixed k makes the sampled tier genuinely sublinear in V).
-    ``sample_fraction`` (the legacy knob) keeps fraction semantics:
-    |roots| = f.V, O(f.V.E) work — still quadratic-family, retained
-    for parity tests and callers that want proportional accuracy.
     Credits sum distributed and halve (each shortest path is seen
     from both endpoint roots).
 
@@ -409,7 +405,7 @@ def edge_betweenness(
         adj_df = adjacency
     else:
         # Materialize once: the sampled path reads the adjacency from
-        # THREE subtrees (root count, sampled-root count, the batch
+        # THREE subtrees (root count, the sampled roots, the batch
         # fan-out) and the upstream edge build is typically the most
         # expensive part of the whole query (a co-occurrence
         # self-join) — without this the lineage re-executes per read.
@@ -448,17 +444,6 @@ def edge_betweenness(
             ).limit(n_roots)
             scale = n_total / n_roots
             root_ids = None  # genuinely sampled — collected below
-    elif sample_fraction is not None and sample_fraction < 1.0:
-        # legacy fraction knob: Spark-side sampling kept verbatim (the
-        # seeded .sample draw is not reproducible on the driver)
-        n_total = roots.count()
-        roots = roots.sample(fraction=sample_fraction, seed=seed)
-        n_sampled = roots.count()
-        if n_sampled == 0:
-            roots = adj_df.select("id").limit(1)
-            n_sampled = 1
-        scale = n_total / n_sampled
-        root_ids = None
 
     id_type = dict(edges.select("src", "dst").dtypes)["src"]
     if head is not None:

@@ -273,28 +273,16 @@ def fpgrowth_frequent_itemsets(
     # minCount = ceil(minSupport * total); nudge below the exact
     # fraction so float round-up can never raise the effective count
     # to support+1 — the final filter restores exactness.
-    # numPartitions (r18, VERDICT task 5): the mllib-level knob that
-    # repartitions the conditional-tree mining. SWEPT at sf0.1
-    # (scripts/probe_r18_fpg_parts.py: 0/8/32/64 → 10.8/12.2/14.1/
-    # 16.1 s min-of-2, outputs identical at every setting) — the
-    # library default (= input partitioning) WINS at bench scale; the
-    # knob's extra shuffle of conditional bases costs more than the
-    # parallelism it adds. Kept as an env escape hatch for corpora
-    # whose conditional trees are genuinely unbalanced at cluster
-    # scale (itemset counts are partitioning-invariant, so the knob
-    # can never change results). Env SPARK_GRAFT_FPG_PARTS; unset or
-    # 0 = library default.
-    import os
-
-    n_parts = int(os.environ.get("SPARK_GRAFT_FPG_PARTS", "0"))
-    fpg = FPGrowth(
+    # numPartitions stays at the library default (= input
+    # partitioning): swept 0/8/32/64 at sf0.1 → 10.8/12.2/14.1/16.1 s
+    # with identical outputs (OPTIMIZATION_r18.md §6, VERDICT.md r18
+    # table) — the extra shuffle of conditional bases costs more than
+    # the parallelism it adds.
+    model = FPGrowth(
         itemsCol=items_col,
         minSupport=max(support - 0.5, 0.5) / max(total, 1),
         minConfidence=0.5,
-    )
-    if n_parts > 0:
-        fpg = fpg.setNumPartitions(n_parts)
-    model = fpg.fit(pruned)
+    ).fit(pruned)
     coded = model.freqItemsets.where(F.col("freq") >= support)
     # decode: explode codes, broadcast-join the dictionary back, and
     # regroup on the (distinct-by-construction) code array — sorting

@@ -42,15 +42,6 @@ def approx_distinct_count(
     return df.agg(F.approx_count_distinct(col, rsd).alias(alias))
 
 
-def avg_by(
-    df: DataFrame, keys: list[str | Column], value: str | Column, alias: str = "avg_value"
-) -> DataFrame:
-    """A4: algebraic average per key — (sum, count) partial state,
-    exactly the reference's two-field accumulator
-    (Assignment1/task2.py:37-43), but planned by Catalyst."""
-    return df.groupBy(*keys).agg(F.avg(value).alias(alias))
-
-
 def top_k_by_count(
     df: DataFrame,
     key: str | Column,
@@ -225,25 +216,6 @@ def top_k_per_group(
     fn = F.dense_rank() if ties else F.row_number()
     w = Window.partitionBy(group).orderBy(*order)
     return df.withColumn(rank_alias, fn.over(w)).where(F.col(rank_alias) <= k)
-
-
-def dedup_rows(df: DataFrame, *cols: str) -> DataFrame:
-    """P5: distinct rows / drop duplicate key combos
-    (Assignment2/task1.py:27)."""
-    return df.dropDuplicates(list(cols)) if cols else df.distinct()
-
-
-def semantic_intersect(a: DataFrame, b: DataFrame) -> DataFrame:
-    """§2.7: relational INTERSECT (set)."""
-    return a.intersect(b)
-
-
-def semantic_except(a: DataFrame, b: DataFrame) -> DataFrame:
-    """§2.7: relational EXCEPT (set semantics): rows of ``a`` not in
-    ``b``, deduped — ``subtract`` is Spark's set-EXCEPT. (The bag form
-    ``a.exceptAll(b).distinct()`` is wrong: a row in both inputs
-    survives when its multiplicity in ``a`` exceeds that in ``b``.)"""
-    return a.subtract(b)
 
 
 def salted_join(

@@ -1649,13 +1649,13 @@ def graph_betweenness_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # G3 at-scale escape hatch: sampled-roots betweenness (rows-only;
 # tolerance vs the exact path asserted in
-# tests/test_graph.py::test_betweenness_sampled_roots_approximates).
+# tests/test_graph.py::test_betweenness_fixed_roots_approximates).
 # At 100x the vertex count the exact O(V·E) Brandes sweep is the
 # bottleneck; BFS from a FIXED count of seeded roots rescaled by V/k
 # is the documented scale path — this query keeps it exercised at
 # bench scale rather than only on the planted-graph pytest.
-# r13: sample_fraction=0.25 → n_roots=192. The fractional knob kept
-# |roots| proportional to V, so the sweep stayed quadratic-family
+# n_roots=192, not a root fraction: a fraction keeps |roots|
+# proportional to V, so the sweep stays quadratic-family
 # (9.2x/decade measured at sf10, SCALE.md r12); a fixed k makes the
 # sampled tier O(k·E) — per-decade growth tracks the EDGE count only.
 # Graphs with V <= 192 (the sf0.1 tau=5 graph: 37 vertices) run
@@ -2483,25 +2483,14 @@ def _corpus_funnel_impl(
     spark: SparkSession,
     sf_dir: str,
     lsh: bool,
-    docs: DataFrame | None = None,
     semantic: float | None = None,
     quality_model: float | None = None,
-    survivors: bool = False,
 ) -> DataFrame:
-    # ``docs`` (r15): the funnel over an injected document set instead
-    # of the full table — the subsample-then-curate composition
-    # (scripts/probe_subsample_curate.py measures it at sf10). The
-    # None default only pins WHICH relation feeds the funnel (the
-    # loaded table, as before); the registered plans themselves DID
-    # change in r15 — the exact-dup verdict pin below replaces the
-    # groupBy subtree with an ExistingRDD in both funnel rows (both
-    # re-graded in-window r15/r16).
     from .functions.text import normalize, tokenize
     from .operators.dedup import doc_shingle_pairs, doc_shingles, exact_duplicate_groups
     from .operators.similarity import exact_jaccard_pairs, minhash_lsh_pairs
 
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # Pin the exact-dup verdict relation (r15 plan audit): TWO
     # consumers (the near-dup stage's docs1 pre-filter and the final
     # flags join) otherwise each re-run the full-corpus normalize +
@@ -2629,14 +2618,6 @@ def _corpus_funnel_impl(
         # text stages keep docs too short to shingle
         conds.append(conds[-1] & F.coalesce(F.col("_sem"), F.lit(True)))
         names.append("semantic_dedup")
-
-    if survivors:
-        # Composition exit (r16, verdict task 7): the doc_ids that
-        # survive EVERY stage, for chaining the funnel into a
-        # downstream operator (subsample -> funnel -> DSIR-resample,
-        # scripts/probe_chain_sf10.py). Default False — both
-        # registered funnel rows keep their stage-count plans.
-        return flags.where(conds[-1]).select("doc_id")
 
     def _cnt(cond):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("long")

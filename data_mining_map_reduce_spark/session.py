@@ -13,7 +13,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Sized from the host unless overridden: every CPU this process may
+# run on, and (_host_heap) a driver heap of 40% of physical memory.
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
+
+
+def _host_heap() -> str:
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{min(16, max(1, int(0.4 * kb / (1024 * 1024))))}g"
 
 
 def get_spark(
@@ -40,7 +50,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 16g, NOT bigger: the r10 sf10 probe's one-variable isolation
+        # Default heap (_host_heap): 40% of host RAM, capped at 16g —
+        # NOT bigger: the r10 sf10 probe's one-variable isolation
         # matrix (SCALE.md "64g-heap cliff") measured huge-hash-state
         # operators monotonically DEGRADING with heap size — minhash @
         # sf1 ran 56.8 s at 16 g, 105.3 s at 32 g, 436.9 s at 64 g
@@ -50,7 +61,10 @@ def get_spark(
         # scale-out is the cluster design the probe validated;
         # SPARK_GRAFT_DRIVER_MEM overrides for workloads that truly
         # need driver headroom.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_heap(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Scan-side partition sizing: 128 MiB splits keep one scan

@@ -55,12 +55,10 @@ def _fold_batch(
     capacity: int,
     seed: int,
 ) -> int:
-    """The per-key update rule, shared verbatim by BOTH stateful
-    APIs below (so their outputs are bit-identical by construction):
-    first ``capacity`` items fill the reservoir; the n-th item is
-    kept with probability capacity/n, evicting a uniform slot
-    (Assignment6/task3.py:52-60); randomness hash-derived, rows
-    folded in (order_col, item_col) order."""
+    """The per-key update rule: first ``capacity`` items fill the
+    reservoir; the n-th item is kept with probability capacity/n,
+    evicting a uniform slot (Assignment6/task3.py:52-60); randomness
+    hash-derived, rows folded in (order_col, item_col) order."""
     pdf = pdf.sort_values([order_col, item_col])
     for item in pdf[item_col]:
         item = int(item)
@@ -70,65 +68,6 @@ def _fold_batch(
         elif _u01(k, n, seed, "keep") < capacity / n:
             items[int(_u01(k, n, seed, "slot") * capacity)] = item
     return n
-
-
-def _step_key(
-    k: Any,
-    prior: Any,
-    pdfs: Iterator[pd.DataFrame],
-    key_col: str,
-    item_col: str,
-    order_col: str,
-    capacity: int,
-    seed: int,
-) -> tuple[tuple[int, list[int]], pd.DataFrame]:
-    """The ENTIRE per-key micro-batch step, shared verbatim by both
-    stateful APIs: restore ``(n, items)`` from the prior state tuple
-    (``None`` on first sight of the key), fold every Arrow batch
-    through ``_fold_batch``, and return the new state tuple plus the
-    single output row. The two public operators below differ ONLY in
-    state transport (GroupState vs a TWS ValueState) — their outputs
-    are bit-identical by construction, and
-    tests/test_streaming.py::test_keyed_reservoir_transport_parity
-    drives BOTH transports' glue through this seam with mocked state
-    stores, so the parity claim is executed even where
-    ``google.protobuf`` (the TWS state server's wire format) is
-    absent."""
-    if prior is not None:
-        n, items = int(prior[0]), list(prior[1])
-    else:
-        n, items = 0, []
-    for pdf in pdfs:
-        n = _fold_batch(k, n, items, pdf, item_col, order_col, capacity, seed)
-    out = pd.DataFrame({key_col: [k], "n_seen": [n], "sample": [list(items)]})
-    return (n, items), out
-
-
-def make_apws_update(
-    key_col: str, item_col: str, order_col: str, capacity: int, seed: int
-):
-    """GroupState-transport glue for ``keyed_reservoir``, exposed at
-    module level so the transport-parity test can drive it against a
-    mocked GroupState with the exact batches the TWS processor sees."""
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        new, out = _step_key(
-            k,
-            state.get if state.exists else None,
-            pdfs,
-            key_col,
-            item_col,
-            order_col,
-            capacity,
-            seed,
-        )
-        state.update(new)
-        yield out
-
-    return update
 
 
 def keyed_reservoir(
@@ -146,7 +85,21 @@ def keyed_reservoir(
 
     Update rule per item: see ``_fold_batch``.
     """
-    update = make_apws_update(key_col, item_col, order_col, capacity, seed)
+
+    def update(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        (k,) = key
+        if state.exists:
+            prior = state.get
+            n, items = int(prior[0]), list(prior[1])
+        else:
+            n, items = 0, []
+        for pdf in pdfs:
+            n = _fold_batch(k, n, items, pdf, item_col, order_col, capacity, seed)
+        state.update((n, items))
+        yield pd.DataFrame({key_col: [k], "n_seen": [n], "sample": [list(items)]})
+
     return (
         stream.select(key_col, item_col, order_col)
         .groupBy(key_col)
@@ -161,92 +114,3 @@ def keyed_reservoir(
         )
     )
 
-
-def make_reservoir_processor(
-    key_col: str, item_col: str, order_col: str, capacity: int, seed: int
-):
-    """ValueState-transport glue for ``keyed_reservoir_tws``: builds
-    the StatefulProcessor instance at module level so the
-    transport-parity test can run its full init → handleInputRows →
-    close lifecycle against a mocked StatefulProcessorHandle (the
-    only piece the real runtime adds is the protobuf state server,
-    which this container lacks)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Reservoir(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "reservoir", "n bigint, items array<bigint>"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            (k,) = key
-            new, out = _step_key(
-                k,
-                self._state.get() if self._state.exists() else None,
-                rows,
-                key_col,
-                item_col,
-                order_col,
-                capacity,
-                seed,
-            )
-            self._state.update(new)
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return _Reservoir()
-
-
-def keyed_reservoir_tws(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    item_col: str = "event_id",
-    order_col: str = "ts",
-    capacity: int = 32,
-    seed: int = 7,
-) -> DataFrame:
-    """ST8 on Spark 4's ``transformWithStateInPandas`` (r12) — the
-    successor API to applyInPandasWithState: named state variables on
-    the RocksDB state store (requires
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider``), timers, and multiple state
-    types per processor. This operator needs only one ValueState, and
-    it folds items through the SAME ``_step_key``/``_fold_batch``
-    rule with the same hash-derived randomness as ``keyed_reservoir``
-    — so the two APIs' outputs are bit-identical, pytest-pinned
-    (tests/test_streaming.py::test_keyed_reservoir_tws_parity).
-
-    Environment note: the transformWithState Python STATE SERVER
-    speaks protobuf (``google.protobuf``), which this container does
-    not ship — there the full-runtime parity pytest SKIPS with the
-    dependency named and ``keyed_reservoir`` (applyInPandasWithState,
-    no such dependency) remains the engine-exercised ST8 path. The
-    plan still builds without protobuf (the import above is needed
-    only at query start), and r13 adds
-    tests/test_streaming.py::test_keyed_reservoir_transport_parity,
-    which runs BOTH transports' glue (this processor's full
-    lifecycle included) over identical batches with mocked state
-    stores — so everything except the protobuf wire itself is
-    executed here."""
-    return (
-        stream.select(key_col, item_col, order_col)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=make_reservoir_processor(
-                key_col, item_col, order_col, capacity, seed
-            ),
-            outputStructType=(
-                f"{key_col} bigint, n_seen bigint, sample array<bigint>"
-            ),
-            outputMode="update",
-            timeMode="none",
-        )
-    )

@@ -434,175 +434,6 @@ def test_keyed_reservoir_bounded_and_deterministic(spark, sf_dir, tmp_path):
     assert run("reservoir_small_b") == got1
 
 
-def test_keyed_reservoir_transport_parity():
-    """ST8 (r13, closing the r12 verdict's TWS-coverage gap as far as
-    this container allows): run BOTH stateful APIs' per-key glue —
-    the applyInPandasWithState update closure AND the
-    transformWithState StatefulProcessor's full init →
-    handleInputRows → close lifecycle — over identical multi-batch
-    input with mocked state transports, and require bit-identical
-    emissions at EVERY micro-batch. The real engine adds only the
-    state wire (GroupState server / protobuf TWS state server); the
-    engine side of the GroupState path is pinned e2e by
-    test_keyed_reservoir, so this chain extends that anchor to the
-    TWS processor logic without needing google.protobuf. No Spark
-    session: pure pandas, exercising fill AND eviction paths
-    (60 items/key, capacity 8) plus first-sight state restoration."""
-    import pandas as pd
-
-    from data_mining_map_reduce_spark.streaming.stateful import (
-        make_apws_update,
-        make_reservoir_processor,
-    )
-
-    class FakeGroupState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            assert self._v is not None
-            return self._v
-
-        def update(self, v):
-            # the engine round-trips state through Arrow rows: ints
-            # and a sequence, not the live Python list
-            self._v = (int(v[0]), tuple(v[1]))
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = (int(v[0]), tuple(v[1]))
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            assert name == "reservoir"
-            assert "items array<bigint>" in schema
-            return self.states.setdefault(name, FakeValueState())
-
-    cap, seed = 8, 7
-    update = make_apws_update("user_id", "event_id", "ts", cap, seed)
-
-    # 3 micro-batches x 5 keys x 20 rows, arrival order scrambled
-    # within each batch so the (ts, item) fold-order sort matters
-    final = {}
-    for k in range(5):
-        gs = FakeGroupState()
-        proc = make_reservoir_processor("user_id", "event_id", "ts", cap, seed)
-        handle = FakeHandle()
-        proc.init(handle)
-        last_n = 0
-        for b in range(3):
-            idx = [b * 20 + i for i in range(20)]
-            pdf = pd.DataFrame(
-                {
-                    "user_id": [k] * 20,
-                    "event_id": [k * 1000 + i for i in idx],
-                    "ts": [(i * 7 + k) % 13 for i in idx],
-                }
-            ).iloc[::-1]
-            out_a = list(update((k,), iter([pdf.copy()]), gs))
-            out_t = list(proc.handleInputRows((k,), iter([pdf.copy()]), None))
-            assert len(out_a) == len(out_t) == 1
-            pd.testing.assert_frame_equal(out_a[0], out_t[0])
-            n = int(out_t[0]["n_seen"].iloc[0])
-            assert n == last_n + 20  # state actually carried forward
-            last_n = n
-        proc.close()
-        assert gs._v == handle.states["reservoir"]._v  # final states too
-        final[k] = out_t[0]["sample"].iloc[0]
-        assert last_n == 60 and len(final[k]) == cap  # eviction ran
-        assert all(k * 1000 <= it < k * 1000 + 60 for it in final[k])
-    assert len({tuple(s) for s in final.values()}) == 5  # per-key draws
-
-
-def test_keyed_reservoir_tws_parity(spark, sf_dir, tmp_path):
-    """ST8 successor API (r12): transformWithStateInPandas must
-    reproduce applyInPandasWithState bit-for-bit — both fold through
-    the shared _fold_batch rule with hash-derived randomness. Skips
-    (dependency named) where google.protobuf is absent: the TWS
-    Python state server requires it and this container doesn't ship
-    it; the plan itself still builds, which this test exercises
-    before deciding to skip."""
-    import pytest
-
-    from data_mining_map_reduce_spark.streaming.stateful import (
-        keyed_reservoir,
-        keyed_reservoir_tws,
-    )
-
-    path = _events_dir(spark, sf_dir, tmp_path)
-
-    def finals(rows):
-        out = {}
-        for r in rows:
-            if r.user_id not in out or r.n_seen > out[r.user_id][0]:
-                out[r.user_id] = (r.n_seen, tuple(sorted(r.sample)))
-        return out
-
-    # the TWS plan must BUILD regardless of protobuf availability
-    tws_df = keyed_reservoir_tws(
-        file_stream(spark, path, TABLES["events"]), capacity=8
-    )
-    assert [f.name for f in tws_df.schema.fields] == [
-        "user_id",
-        "n_seen",
-        "sample",
-    ]
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "google.protobuf absent: transformWithStateInPandas' "
-            "Python state server cannot start in this container; "
-            "keyed_reservoir (applyInPandasWithState) is the "
-            "exercised ST8 path here. r14 re-checked the remedies: "
-            "no protobuf wheel on disk, no network for pip, and "
-            "package installs are out of contract for this box — "
-            "the mocked-state-store parity test above covers both "
-            "transports' fold logic; the RocksDB state-server "
-            "round-trip stays environment-blocked, not untested "
-            "by choice"
-        )
-
-    apws = finals(
-        run_stream_to_memory(
-            keyed_reservoir(
-                file_stream(spark, path, TABLES["events"]), capacity=8
-            ),
-            "tws_parity_apws",
-            output_mode="update",
-        )
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        tws = finals(
-            run_stream_to_memory(tws_df, "tws_parity_tws", output_mode="update")
-        )
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert tws == apws
-
-
 def test_session_window_stream_batch_parity(spark, sf_dir, tmp_path):
     """ST2 session windows: the stream's emitted sessions must be
     EXACTLY the batch session_window aggregation restricted to
