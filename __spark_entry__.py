@@ -5,10 +5,8 @@
 from SURVEY.md §2 for the driver's DuckDB cross-check at sf0.01.
 
 Ordering is deliberate (queries._DRIVER_ORDER): the driver records
-at most the first 50 queries in its correctness artifact, so
-oracle-backed and recently-changed queries are placed inside that
-window and long-stable trivia after it. Queries past the window
-remain fully runnable and pytest/driver_sim-verified.
+at most the first 50 queries in its correctness artifact. Queries
+past the first 50 remain fully runnable and pytest/driver_sim-verified.
 """
 
 from __future__ import annotations

@@ -35,13 +35,6 @@ def hash_params(i: int, m: int) -> tuple[int, int]:
     return a, b
 
 
-def stable_int(col: Column | str) -> Column:
-    """F6: string (or any) → stable non-negative int in [0, 2^31):
-    ``pmod(xxhash64(x), 2^31-1)``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.xxhash64(c), F.lit(FOLD_PRIME))
-
-
 # A10 (MinHash signature) note: the per-row HOF expression form that
 # used to live here (num_hashes × array_min(transform(...))) exceeded
 # the codegen method budget and evaluated interpreted (~20× slower);

@@ -2089,16 +2089,14 @@ def kmeans_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M1 drift guard (r13 verdict task 3): the same k-means row with the
-# local fast path DISABLED (local_elems_cap=0), so the Arrow-
-# vectorized distributed Lloyd pass (_assign_mean_pass +
-# _argmin_sq_l2, the repo's hottest r13 code) gets a driver row every
-# round it is in-window instead of relying solely on the forced-
-# distributed parity pytest + the sf10 receipt. Rows-only by nature
-# (iterative, like every kmeans row); the local/distributed parity is
-# pytest-asserted, and at driver scale this is cheap (the sf0.01
-# corpus is tiny — the cost is per-round job latency, bounded by
-# Lloyd's converged iteration count).
+# M1 drift guard: the same k-means row with the local fast path
+# DISABLED (local_elems_cap=0), so the Arrow-vectorized distributed
+# Lloyd pass (_assign_mean_pass + _argmin_sq_l2) gets its own driver
+# row instead of relying solely on the forced-distributed parity
+# pytest + the sf10 receipt. Rows-only by nature (iterative, like
+# every kmeans row); the local/distributed parity is pytest-asserted,
+# and at driver scale this is cheap (the sf0.01 corpus is tiny — the
+# cost is job latency, bounded by Lloyd's converged iteration count).
 # ---------------------------------------------------------------------------
 @query("kmeans_cluster_sizes_dist")
 def kmeans_cluster_sizes_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4068,13 +4066,13 @@ def content_based_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey").alias("i"),
         F.concat_ws(" ", "p_name", "p_type").alias("text"),
     )
-    # Pin the two multi-consumer profile relations (r15: the plan
-    # audit counted 47 exchanges here — the TF-IDF subtree behind
-    # iprof re-planned once per consumer: user_profiles, the item-norm
-    # aggregate, and the intersection join; uprof likewise twice).
-    # Both are SLIM (two columns) so the r12 slim-vs-fat rule allows
-    # the RDD pin; audited plan drops to 12 exchanges, values
-    # identical (FULL oracle re-graded in-window this round).
+    # Pin the two multi-consumer profile relations (the plan audit
+    # counted 47 exchanges here without them — the TF-IDF subtree
+    # behind iprof re-planned once per consumer: user_profiles, the
+    # item-norm aggregate, and the intersection join; uprof likewise
+    # twice). Both are SLIM (two columns) so the slim-vs-fat rule
+    # allows the RDD pin; audited plan drops to 12 exchanges, values
+    # identical (checked by the FULL oracle).
     iprof = item_profiles(item_docs, k=5).localCheckpoint(eager=False)
     ratings = _ratings(spark, sf_dir).cache()
     uprof = user_profiles(ratings, iprof, k=20).localCheckpoint(eager=False)
@@ -6245,42 +6243,9 @@ def winnow_candidate_docs(
     return docs.join(cand, id_col)
 
 
-# The driver's CORRECTNESS artifact records at most the FIRST 50
-# registered queries, so ordering is part of the contract surface.
-# Rotation policy (documented per the r5 advisor's request, MECHANIZED
-# r13 per the r12 verdict):
-#   in-window  = (a) queries that have never had a driver row,
-#                (b) queries whose newest driver row would exceed the
-#                    2-round staleness limit at this round's close,
-#                (c) queries whose code changed since the last round.
-#   excluded   = everything else; each is listed in the EXCLUDED
-#                manifest below with the round of its last green row
-#                so the judge can audit what the cap hides.
-# The invariant (every registered query's newest driver row is <= 2
-# rounds old) is ENFORCED by tests/test_registry.py::
-# test_driver_window_staleness_invariant, which parses every
-# CORRECTNESS_r*.json and fails if this list would let any query go
-# stale at the upcoming close; scripts/make_driver_order.py computes
-# the must-rotate set mechanically at round open.
-# Names absent from this list sort AFTER every listed name (past the
-# cap) — a new query must be added here explicitly to get a driver row.
-#
-# _WINDOW_ROUND pins the round this committed window was built FOR
-# (r15 verdict task 1). The registry tests grade staleness/capacity
-# against THIS round, not newest-artifact + 1 — the driver writes
-# CORRECTNESS_r{N}.json after the builder's close, and for two rounds
-# running the suite went red at judge time because the already-closed
-# window was being re-graded as if it were the next round's. The
-# companion guard lives in scripts/make_driver_order.py (run by
-# round_open.sh), which hard-fails once the newest artifact round
-# reaches _WINDOW_ROUND until the window is rebalanced and this pin
-# bumped — so the pin cannot silently go stale either.
-_WINDOW_ROUND = 17
-
+# The driver records only the first 50 names that all_queries() returns,
+# so this order is part of the contract. A new query must be listed here.
 _DRIVER_ORDER = [
-    # -- the 22 obligated leads: r14-green rows at the staleness limit
-    #    (age 2 at r16 close; scripts/make_driver_order.py computes
-    #    the same set mechanically) --
     "flagship_category_avg",
     "fpgrowth_itemsets",
     "gn_quality_check",
@@ -6303,39 +6268,17 @@ _DRIVER_ORDER = [
     "train_test_split_counts",
     "union_filtered_event_counts",
     "window_heavy_hitter_users",
-    # -- changed-code r16-green rows (re-grade this round's fixes):
-    #    domain_mixture_weights re-grades the try_divide zero-token
-    #    guard (r16 ADVICE item 1); packed_sequence_stats re-grades
-    #    the eager localCheckpoint partition pin (item 2);
-    #    media_phash_pairs re-grades the per-id NULL-payload sentinel
-    #    (item 3) + the shared probe-media builder refactor;
-    #    corpus_curation_funnel_semantic re-grades the funnel's
-    #    conds[-1] chaining refactor (identity when quality_model is
-    #    None, but the code path changed) --
     "domain_mixture_weights",
     "packed_sequence_stats",
     "media_phash_pairs",
     "corpus_curation_funnel_semantic",
-    # -- r17 debuts (a never-rowed query must be in-window its first
-    #    round): the completed BPE chain (X37 merge loop + encoder +
-    #    the X34 packing twin on learned-tokenizer counts — all three
-    #    FULL oracles via the iterated list_reduce CTE chain) --
     "bpe_learned_merges",
     "bpe_token_counts",
     "packed_sequence_stats_bpe",
-    # -- r17 debuts: the consolidated rows (verdict task 8 — same
-    #    operator evidence, fewer rows; both FULL oracles) --
     "basic_count_stats",
     "window_distinct_users",
-    # -- r17 debut: the funnel with the X36 model-based quality stage
-    #    (rows-only by nature — iterative L-BFGS; stage counts pinned
-    #    at sf0.01 by pytest) --
     "corpus_curation_funnel_modelq",
-    # -- r17 debut: X38 completion — canonical media dedup (rows-only
-    #    by nature — the image decoder is not SQL-expressible;
-    #    planted-cluster + tie-rule pytests) --
     "media_dedup_canonical",
-    # -- oldest-first fill: r15-green rows (age 2 at r17 close) --
     "ann_recall_check",
     "ann_topk_exact",
     "ann_topk_ivf",
@@ -6351,102 +6294,83 @@ _DRIVER_ORDER = [
     "cooccurrence_pairs",
     "cooccurrence_pairs_lsh",
     "corr_qty_price_by_flag",
-    # -- r16-cohort amortization picks (keep that cohort's outside
-    #    count at the AMORTIZE_OUTSIDE_MAX=44 bound) --
     "window_tumbling_hourly",
     "window_sliding_hourly",
-    # ---- driver cap (50) falls here ----
+    "customers_in_both_statuses",
+    "customers_never_final",
+    "doc_repetition_scores",
+    "embedding_pair_distances",
+    "event_props_extract",
+    "event_rollup_multigrain",
+    "fm_distinct_users",
+    "frequent_items",
+    "frequent_pairs",
+    "girvan_newman_communities",
+    "graph_degree_distribution",
+    "graph_triangle_count",
+    "join_filter_brand_counts",
+    "kmeans_wcss_check",
+    "kmv_distinct_users",
+    "largest_baskets",
+    "media_feature_rollup",
+    "media_frame_sample",
+    "order_item_lists",
+    "partition_layout_stats",
+    "pivot_status_by_priority",
+    "reservoir_sample_events",
+    "revenue_cube",
+    "rollup_revenue",
+    "session_windows_per_user",
+    "sketch_error_check",
+    "solo_flagship_parity",
+    "source_mix_stats",
+    "suffstats_by_label",
+    "tfidf_top_terms",
+    "top_users_by_orders",
+    "weighted_doc_sample",
+    "word_count_top20",
+    "minhash_lsh_pairs",
+    "near_dup_docs_lsh",
+    "dedup_canonical_docs_lsh",
+    "corpus_curation_funnel_lsh",
+    "semantic_dedup_docs",
+    "doc_dsir_weights",
+    "pii_scan_stats",
+    "dsir_resampled_docs",
+    "decontaminated_corpus_stats",
+    "quality_filter_stats",
+    "bpe_pair_counts",
+    "dedup_keep_best_docs",
+    "corpus_curation_funnel",
+    "pii_redact_stats",
+    "contamination_ngram_overlap",
+    "ann_topk_ivfpq",
+    "ann_topk_lsh",
+    "approx_distinct_users",
+    "baskets_by_customer",
+    "bfr_round_stats",
+    "cm_heavy_hitter_partkeys",
+    "dedup_canonical_docs",
+    "dict_encode_brands",
+    "dict_encode_partkeys_big",
+    "doc_fingerprint_stats",
+    "doc_length_percentiles",
+    "doc_length_percentiles_approx",
+    "doc_lm_perplexity",
+    "doc_quality_stats",
+    "duplicate_ngram_spans",
+    "duplicate_ngram_spans_winnowed",
+    "event_value_tier_counts",
+    "exact_dup_doc_groups",
+    "fingerprint_overlap_pairs",
 ]
-
-# Queries excluded from the r17 driver window: 25 r15-green rows and
-# 44 r16-green rows (ages 2 and 1 at r17 close — both inside the
-# staleness invariant; the r15 residue is obligated first in the r18
-# window by make_driver_order, and the r16 cohort sits exactly at the
-# AMORTIZE_OUTSIDE_MAX=44 bound). Rows whose SOURCE module changed
-# this round without an in-window slot carry a per-row note naming
-# the in-window query + pytest that grades the changed code path.
-_EXCLUDED_R17 = [
-    # name                      last green driver row
-    ("customers_in_both_statuses", "r15"),
-    ("customers_never_final", "r15"),
-    ("doc_repetition_scores", "r15"),
-    ("embedding_pair_distances", "r15"),
-    ("event_props_extract", "r15"),
-    ("event_rollup_multigrain", "r15"),
-    ("fm_distinct_users", "r15; sketches.py untouched this round — the FM family is graded in-window by window_distinct_users (debut), whose oracle replays the identical per-window FM estimator"),
-    ("frequent_items", "r15"),
-    ("frequent_pairs", "r15"),
-    ("girvan_newman_communities", "r15"),
-    ("graph_degree_distribution", "r15"),
-    ("graph_triangle_count", "r15"),
-    ("join_filter_brand_counts", "r15"),
-    ("kmeans_wcss_check", "r15"),
-    ("kmv_distinct_users", "r15"),
-    ("largest_baskets", "r15"),
-    ("media_feature_rollup", "r15; the r17 multimodal.py change (NULL-payload sentinel + media_dedup_canonical) is phash-path only — extract_features untouched; graded in-window by media_phash_pairs + media_dedup_canonical"),
-    ("media_frame_sample", "r15; same note as media_feature_rollup"),
-    ("order_item_lists", "r15"),
-    ("partition_layout_stats", "r15"),
-    ("pivot_status_by_priority", "r15"),
-    ("reservoir_sample_events", "r15"),
-    ("revenue_cube", "r15"),
-    ("rollup_revenue", "r15"),
-    ("session_windows_per_user", "r15"),
-    ("sketch_error_check", "r16"),
-    ("solo_flagship_parity", "r16"),
-    ("source_mix_stats", "r16"),
-    ("suffstats_by_label", "r16"),
-    ("tfidf_top_terms", "r16; text_analysis.py's r17 change is the domain_mixture_weights try_divide guard — no shared helper touched; graded in-window by domain_mixture_weights"),
-    ("top_users_by_orders", "r16"),
-    ("weighted_doc_sample", "r16"),
-    ("word_count_top20", "r16"),
-    ("minhash_lsh_pairs", "r16"),
-    ("near_dup_docs_lsh", "r16"),
-    ("dedup_canonical_docs_lsh", "r16"),
-    ("corpus_curation_funnel_lsh", "r16; the r17 _corpus_funnel_impl change adds the quality_model= branch behind a None default and rewrites the semantic chain to conds[-1] (== k4 when both are None — same expression object, plan unchanged); the changed paths are graded in-window by corpus_curation_funnel_modelq (debut) and corpus_curation_funnel_semantic, plus the first-five-stage identity pytests"),
-    ("semantic_dedup_docs", "r16"),
-    ("doc_dsir_weights", "r16"),
-    ("pii_scan_stats", "r16"),
-    ("dsir_resampled_docs", "r16"),
-    ("decontaminated_corpus_stats", "r16"),
-    ("quality_filter_stats", "r16; quality_model.py's r17 change is docstring-only (eager-action note); the module is also graded in-window by corpus_curation_funnel_modelq (debut), which runs the same classifier + keep rule"),
-    ("bpe_pair_counts", "r16; text_analysis.py change is the try_divide guard (see tfidf_top_terms note); the BPE family is graded in-window by the three bpe_* debuts"),
-    ("dedup_keep_best_docs", "r16"),
-    ("corpus_curation_funnel", "r16; same note as corpus_curation_funnel_lsh"),
-    ("pii_redact_stats", "r16"),
-    ("contamination_ngram_overlap", "r16"),
-    ("ann_topk_ivfpq", "r16"),
-    ("ann_topk_lsh", "r16"),
-    ("approx_distinct_users", "r16"),
-    ("baskets_by_customer", "r16"),
-    ("bfr_round_stats", "r16"),
-    ("cm_heavy_hitter_partkeys", "r16"),
-    ("dedup_canonical_docs", "r16"),
-    ("dict_encode_brands", "r16"),
-    ("dict_encode_partkeys_big", "r16"),
-    ("doc_fingerprint_stats", "r16"),
-    ("doc_length_percentiles", "r16"),
-    ("doc_length_percentiles_approx", "r16"),
-    ("doc_lm_perplexity", "r16"),
-    ("doc_quality_stats", "r16"),
-    ("duplicate_ngram_spans", "r16"),
-    ("duplicate_ngram_spans_winnowed", "r16"),
-    ("event_value_tier_counts", "r16"),
-    ("exact_dup_doc_groups", "r16"),
-    ("fingerprint_overlap_pairs", "r16"),
-]
-_DRIVER_ORDER += [name for name, _ in _EXCLUDED_R17]
 
 
 _V = TypeVar("_V")
 
 
 def _driver_sorted(mapping: dict[str, _V]) -> dict[str, _V]:
-    rank = {name: i for i, name in enumerate(_DRIVER_ORDER)}
-    fallback = len(rank)
-    return dict(
-        sorted(mapping.items(), key=lambda kv: (rank.get(kv[0], fallback)))
-    )
+    return {name: mapping[name] for name in _DRIVER_ORDER if name in mapping}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

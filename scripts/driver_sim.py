@@ -39,24 +39,6 @@ def main() -> int:
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     only = set(sys.argv[1:])
 
-    # r12 verdict (What's wrong #3): ENGINE_STATUS.md shipped one
-    # artifact stale three rounds running because the regeneration
-    # step was manual. Regenerate it on every verify run so the
-    # committed table always reflects the newest CORRECTNESS_r*.json.
-    try:
-        import subprocess
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        subprocess.run(
-            [sys.executable, os.path.join(here, "make_engine_status.py")],
-            check=True,
-            stdout=subprocess.DEVNULL,
-            timeout=120,
-        )
-        print("ENGINE_STATUS.md regenerated", flush=True)
-    except Exception as exc:  # non-fatal: verify still runs
-        print(f"ENGINE_STATUS regen skipped: {exc}", flush=True)
-
     # Scale-run knobs (r8 verdict item 3): the sf1 co-occurrence graph
     # build GC-OOMs a default-heap driver, so scale runs need explicit
     # headroom, e.g.

@@ -1,9 +1,8 @@
 #!/bin/bash
-# Round-close checklist, mechanized (the open-side twin is
-# scripts/round_open.sh; this is the one command to run LAST, after
-# the official bench and the final feature commit):
-#   1. registry invariants (window staleness + capacity + README
-#      counts) — the committed _DRIVER_ORDER must survive the close
+# Round-close checklist, mechanized (the one command to run LAST,
+# after the official bench and the final feature commit):
+#   1. registry invariants (README counts, oracle subset, and
+#      _DRIVER_ORDER covering the registry in the accessors' order)
 #   2. ENGINE_STATUS regenerated from the newest artifacts (fails the
 #      run if that leaves a dirty diff — commit it)
 #   3. bench drift adjudication: HEAD's BENCH_SPREAD.json vs the

@@ -1,35 +1,24 @@
-"""Registry invariants that keep shipped docs honest (r9 verdict ask 3):
-the query/oracle counts printed in README.md must equal the live
-registry, so adding a query without bumping the doc fails CI instead
-of drifting silently. r13 adds the mechanized driver-window staleness
-invariant (r12 verdict task 2): the window rotation used to be a
-hand-curated manifest with zero slack — one editing slip would have
-silently broken the "newest driver row <= 2 rounds old" contract."""
+"""Registry invariants that keep shipped docs and the driver contract
+honest: the query/oracle counts printed in README.md must equal the
+live registry, every oracle must name a registered query, and
+``_DRIVER_ORDER`` must list every registered query exactly once and
+fix the order in which ``all_queries()`` / ``all_oracles()`` hand them
+to the driver (which records only the first 50)."""
 
 from __future__ import annotations
 
 import re
-import sys
 from pathlib import Path
 
 from data_mining_map_reduce_spark.queries import (
     _DRIVER_ORDER,
-    _WINDOW_ROUND,
     ORACLES,
     SPARK_QUERIES,
+    all_oracles,
+    all_queries,
 )
 
 README = Path(__file__).resolve().parent.parent / "README.md"
-REPO = Path(__file__).resolve().parent.parent
-
-sys.path.insert(0, str(REPO / "scripts"))
-from registry_window import (  # noqa: E402 — one policy definition for
-    AMORTIZE_OUTSIDE_MAX,  # the round-open tool AND this CI guard
-    STALENESS_LIMIT,
-    WINDOW_CAP,
-    cohort_outside_counts,
-    newest_driver_rows,
-)
 
 
 def test_readme_counts_match_registry():
@@ -63,142 +52,12 @@ def test_no_query_name_is_purely_numeric():
     assert not bad, f"digit-only query names break spread decoding: {bad}"
 
 
-def _newest_driver_rows() -> tuple[dict[str, int], int]:
-    newest, max_round = newest_driver_rows(REPO)
-    assert max_round > 0, "no CORRECTNESS_r*.json artifacts found"
-    return newest, max_round
-
-
 def test_driver_order_covers_registry_exactly():
-    """Every registered query appears in _DRIVER_ORDER exactly once
-    (an unlisted name would silently sort past the cap forever)."""
+    """Every registered query appears in _DRIVER_ORDER exactly once,
+    and the driver accessors return exactly that order."""
     assert len(_DRIVER_ORDER) == len(set(_DRIVER_ORDER)), "duplicate names"
     assert set(_DRIVER_ORDER) == set(SPARK_QUERIES), (
         set(_DRIVER_ORDER) ^ set(SPARK_QUERIES)
     )
-
-
-def test_window_round_pin_is_current():
-    """PHASE-AWARENESS (r15 verdict task 1). The committed window is
-    built FOR `_WINDOW_ROUND`; the driver writes CORRECTNESS_r{N}.json
-    AFTER the builder's close, so for two rounds running the suite was
-    red at judge time — the already-closed window was graded as if it
-    were the next round's. The staleness/capacity tests below now
-    grade against the pinned round, which is valid in exactly two
-    states: window built, artifact not yet written (_WINDOW_ROUND =
-    newest + 1) or artifact written, next round not yet opened
-    (_WINDOW_ROUND = newest). Anything else means a rebalance was
-    skipped (round_open.sh's make_driver_order call also hard-fails
-    in that state) or the pin jumped a round."""
-    _, max_round = _newest_driver_rows()
-    assert max_round <= _WINDOW_ROUND <= max_round + 1, (
-        f"_WINDOW_ROUND={_WINDOW_ROUND} but the newest artifact is "
-        f"r{max_round} — run scripts/make_driver_order.py, rebalance "
-        f"_DRIVER_ORDER, and bump the pin"
-    )
-
-
-def test_driver_window_staleness_invariant():
-    """MECHANIZED rotation guard (r12 verdict task 2). At the close of
-    the round this window was built for (`_WINDOW_ROUND` — NOT
-    newest-artifact + 1; see test_window_round_pin_is_current), every
-    query NOT in the current 50-row window keeps its existing newest
-    row. Fail if that would leave any query's newest row > 2 rounds
-    old — i.e. every must-rotate row has to sit inside the window
-    BEFORE the round runs, and a brand-new query (no row yet) must be
-    in-window its first round."""
-    newest, _ = _newest_driver_rows()
-    upcoming = _WINDOW_ROUND
-    window = set(_DRIVER_ORDER[:WINDOW_CAP])
-    stale = []
-    for name in SPARK_QUERIES:
-        if name in window:
-            continue  # gets a fresh row when the upcoming round runs
-        rowed = newest.get(name)
-        if rowed is None:
-            stale.append(f"{name} (never rowed — must debut in-window)")
-        elif upcoming - rowed > STALENESS_LIMIT:
-            stale.append(
-                f"{name} (newest row r{rowed}, would be "
-                f"{upcoming - rowed} rounds old at r{upcoming} close)"
-            )
-    assert not stale, (
-        f"_DRIVER_ORDER window violates the staleness invariant for "
-        f"r{upcoming}; rotate these into the top-{WINDOW_CAP} (run "
-        f"scripts/make_driver_order.py for the computed set): {stale}"
-    )
-
-
-def test_driver_window_next_round_has_capacity():
-    """Early warning: the rows this window leaves un-rotated must fit
-    the NEXT window. If the obligation count alone exceeds the cap,
-    the invariant is already unsatisfiable next round — fail NOW,
-    while this round can still rotate extra rows to amortize the
-    debt. (Code-changed re-rows are phase shifts — rowing a query
-    early only moves WHICH round owes it — so they don't consume
-    capacity long-term; roster GROWTH does, which the roster test
-    below bounds.)"""
-    newest, _ = _newest_driver_rows()
-    upcoming = _WINDOW_ROUND  # phase-aware: see test_window_round_pin_is_current
-    window = set(_DRIVER_ORDER[:WINDOW_CAP])
-    # After the upcoming round closes: in-window rows are fresh
-    # (age 0); everything else keeps `newest`. Next round must rotate
-    # any query whose row would otherwise exceed the limit at ITS
-    # close.
-    must_rotate_next = [
-        q
-        for q in SPARK_QUERIES
-        if q not in window
-        and (upcoming + 1) - newest.get(q, 0) > STALENESS_LIMIT
-    ]
-    assert len(must_rotate_next) <= WINDOW_CAP, (
-        f"r{upcoming + 1} would owe {len(must_rotate_next)} rotations "
-        f"with only {WINDOW_CAP} slots — rebalance this window"
-    )
-
-
-def test_driver_window_amortizes_cohorts():
-    """r14 verdict task 3: rows green in the same round form a cohort
-    that all comes due together (newest + STALENESS_LIMIT + 1). r14
-    deferred the whole 48-row r13 cohort at once, which left r16
-    owing 54 > 50 — the capacity test above could only fire a round
-    late. Bound the cause, not the symptom: the committed window may
-    leave at most AMORTIZE_OUTSIDE_MAX rows of ANY single cohort
-    outside, so the round a cohort comes due keeps
-    WINDOW_CAP - AMORTIZE_OUTSIDE_MAX slots free for debuts and
-    changed-code re-rows. Windows therefore always mix cohorts —
-    each round's 50 fresh rows get split across later windows instead
-    of arriving as one block."""
-    newest, _ = _newest_driver_rows()
-    window = set(_DRIVER_ORDER[:WINDOW_CAP])
-    over = {
-        r: n
-        for r, n in cohort_outside_counts(newest, window, SPARK_QUERIES).items()
-        if n > AMORTIZE_OUTSIDE_MAX
-    }
-    assert not over, (
-        f"window leaves whole cohorts outside beyond the amortization "
-        f"bound ({AMORTIZE_OUTSIDE_MAX}): {over} — pull more rows of "
-        f"those cohorts in-window (scripts/make_driver_order.py "
-        f"computes an amortized fill)"
-    )
-
-
-def test_roster_within_sustainable_capacity():
-    """The structural bound behind all the window math: a row ages to
-    STALENESS_LIMIT legally and violates one round later, so every
-    query needs renewal every STALENESS_LIMIT + 1 rounds — steady-
-    state obligations are roster/(STALENESS_LIMIT + 1) per round and
-    the roster cannot exceed WINDOW_CAP * (STALENESS_LIMIT + 1)
-    (=150). At the bound, REGISTERING A NEW QUERY REQUIRES RETIRING
-    ONE — this is the test that says so before the rotation becomes
-    unsatisfiable in some later round's window arithmetic. (The
-    practiced every-2-rounds cadence keeps a ~50-query cushion under
-    this ceiling; crossing ~100 starts consuming that slack.)"""
-    cap = WINDOW_CAP * (STALENESS_LIMIT + 1)
-    assert len(SPARK_QUERIES) <= cap, (
-        f"roster {len(SPARK_QUERIES)} exceeds the sustainable "
-        f"{cap} (= {WINDOW_CAP}-row window x (STALENESS_LIMIT+1)="
-        f"{STALENESS_LIMIT + 1}-round renewal cycle); retire a query "
-        f"for every one added"
-    )
+    assert list(all_queries()) == _DRIVER_ORDER
+    assert list(all_oracles()) == [n for n in _DRIVER_ORDER if n in ORACLES]
