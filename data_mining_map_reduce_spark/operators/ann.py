@@ -96,7 +96,7 @@ def cosine_topk(
     Cost is |probes| × |corpus| — exact brute force is the ground
     truth for FEW probes, not a batch self-join. ``max_probes`` fails
     fast instead of silently degenerating; large probe sets belong on
-    ``hyperplane_lsh_topk`` (or cosine_near_dup_pairs_lsh for
+    ``hyperplane_lsh_topk`` (or semantic_near_dup_pairs for
     all-pairs shapes).
     """
     if max_probes is not None:
@@ -468,59 +468,11 @@ def cosine_near_dup_pairs_exact(
     """Exact embedding near-dup: all unordered pairs with cosine ≥
     ``threshold`` → (a, b, cos_sim). Ground-truth/oracle path — the
     O(n²) join is the verification twin, not the scale path (that is
-    ``cosine_near_dup_pairs_lsh``)."""
+    ``semantic_near_dup_pairs``)."""
     lhs = emb.select(F.col(id_col).alias("a"), _as_double_vec(vec_col).alias("_va"))
     rhs = emb.select(F.col(id_col).alias("b"), _as_double_vec(vec_col).alias("_vb"))
     return (
         lhs.join(rhs, F.col("a") < F.col("b"))
-        .select("a", "b", F.round(cosine("_va", "_vb"), 6).alias("cos_sim"))
-        .where(F.col("cos_sim") >= threshold)
-    )
-
-
-def cosine_near_dup_pairs_lsh(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 36,
-    bands: int = 12,
-    seed: int = 7,
-    max_bucket: int | None = 5000,
-) -> DataFrame:
-    """Embedding near-dup at scale: hyperplane-sign banding (r =
-    num_planes/bands sign bits per band) → bucket equi-join →
-    exact-cosine verify ≥ ``threshold``. Precision 1.0 (verified);
-    recall = 1-(1-p^r)^b with p = 1-θ/π — ~0.97 at cos 0.4 with
-    36×12. Candidate cost is Σ bucket² per band, never n² — and
-    ``max_bucket`` hard-caps the per-bucket quadratic term against
-    degenerate (near-identical-vector) corpora; the vectors stay out
-    of the bucket shuffle (ids re-join post-dedup).
-    """
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_planes, len(_first_vec(emb, vec_col))))
-    v = _as_double_vec(vec_col)
-    banded = _cap_buckets(
-        emb.select(
-            F.col(id_col).alias("_id"),
-            F.posexplode(hyperplane_signature(v, planes, bands)).alias(
-                "_band", "_bval"
-            ),
-        ),
-        max_bucket,
-    )
-    pairs = (
-        banded.select(F.col("_id").alias("a"), "_band", "_bval")
-        .join(banded.select(F.col("_id").alias("b"), "_band", "_bval"), ["_band", "_bval"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    va = emb.select(F.col(id_col).alias("a"), _as_double_vec(vec_col).alias("_va"))
-    vb = emb.select(F.col(id_col).alias("b"), _as_double_vec(vec_col).alias("_vb"))
-    return (
-        pairs.join(va, "a")
-        .join(vb, "b")
         .select("a", "b", F.round(cosine("_va", "_vb"), 6).alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
     )
@@ -707,13 +659,12 @@ def semantic_dedup(
     seed: int = 7,
 ) -> DataFrame:
     """End-to-end semantic dedup: cluster → within-cluster cosine
-    pairs (``semantic_near_dup_pairs``) → connected components → one
-    canonical doc (min id) per semantic-duplicate group; every id
-    mapped, singletons to themselves → (id, canonical_id, is_kept).
-    The embedding-level sibling of the X16 text pipeline
-    (dedup_canonical_docs): transitive closure matters for the same
-    reason — A≈B and B≈C must collapse to one survivor."""
-    from .graph import connected_components
+    pairs (``semantic_near_dup_pairs``) → ``dedup.cluster_survivors``
+    → one canonical doc (min id) per semantic-duplicate group; every
+    id mapped, singletons to themselves → (id, canonical_id, is_kept).
+    The embedding-level sibling of the text pipeline
+    (dedup_canonical_docs)."""
+    from .dedup import cluster_survivors
 
     pairs = semantic_near_dup_pairs(
         emb,
@@ -725,18 +676,7 @@ def semantic_dedup(
         max_cluster_rows=max_cluster_rows,
         seed=seed,
     )
-    comp = connected_components(
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    ids = emb.select(F.col(id_col).alias("id"))
-    return (
-        ids.join(comp, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("component", "id").alias("canonical_id"),
-            (F.coalesce("component", "id") == F.col("id")).alias("is_kept"),
-        )
-    )
+    return cluster_survivors(emb.select(id_col), id_col, pairs).select(id_col, F.col("best_id").alias("canonical_id"), "is_kept")
 
 
 def _first_vec(emb: DataFrame, vec_col: str):

@@ -12,12 +12,15 @@ Scale posture (the 100 TB design review):
   the canonical-id join is a self-equi-join on the 64-bit hash.
 - MinHash LSH: no all-pairs anywhere; candidates come from band
   buckets (operators/similarity.py), skew-capped.
-- SimHash: 64-bit fingerprint per doc (one codegen pass), banded
-  into 8×8-bit sub-keys; hamming ≤ 7 < bands ⇒ pigeonhole guarantees
-  one identical band, so the bucket join has *guaranteed* recall at
-  that radius — a stronger property than probabilistic MinHash
-  banding. (Calibration on the testdata corpus: planted near-dups at
-  Jaccard 0.9+ land at hamming 0-10.)
+- SimHash: 60-bit fingerprint per doc (one codegen pass), banded
+  into 10×6-bit sub-keys (hamming_band_pairs, shared with the media
+  dHash pairs); hamming ≤ 7 < bands ⇒ pigeonhole guarantees intact
+  bands, so the bucket join has *guaranteed* recall at that radius —
+  a stronger property than probabilistic MinHash banding.
+  (Calibration on the testdata corpus: planted near-dups at Jaccard
+  0.9+ land at hamming 0-10.)
+- cluster_survivors: pairs → connected components → one survivor per
+  cluster, shared by every dedup pipeline (text, media, embedding).
 """
 
 from __future__ import annotations
@@ -293,17 +296,21 @@ def fingerprint_overlap_pairs(
     )
 
 
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    bands: int = 10,
-    hamming_max: int = 7,
+def hamming_band_pairs(
+    fp: DataFrame,
+    id_col: str,
+    hash_col: str,
+    hash_bits: int,
+    bands: int,
+    hamming_max: int,
+    max_subset: int,
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
-    """SimHash near-dup pairs: Manku-style combination banding over
-    the 60-bit fingerprint, equi-join on the banded key, verify
-    hamming ≤ ``hamming_max``.
+    """All pairs of ``fp`` rows whose ``hash_bits``-wide fingerprints
+    in ``hash_col`` differ in at most ``hamming_max`` bits: Manku-style
+    combination banding, equi-join on the banded key, popcount verify.
+    Rows pair only within equal ``by`` values. Returns
+    (a, b, hamming, *by) with a < b.
 
     With hamming_max < bands, pigeonhole guarantees every qualifying
     pair has at least m = bands - hamming_max fully-intact bands —
@@ -315,33 +322,31 @@ def simhash_near_dup_pairs(
     replayed fingerprints — the candidate scheme is invisible to the
     result.
 
-    Why s-subsets instead of single bands (the r9 sf1 finding): with
-    bands=10 over 60 bits a single-band key is only 6 bits wide — 64
-    bucket values — so candidate pairs grow O(n²/2^bits): measured
-    ~195 M join rows at 50 000 docs (19× the sf0.1 wall for 10× the
-    data, and hopeless at 100 TB). Joining on s=3 band-value triples
-    (C(10,3)=120 keys/doc, the scheme of Manku et al., WWW'07 §3)
-    widens the key to 18 bits + combo id: expected bucket size drops
-    below 1 doc, the join output collapses to ~the true pair set,
-    and the explode cost is a linear 12× row factor on the (tiny)
-    fingerprint relation. The verify stays a broadcast-free codegen
-    popcount; ``distinct`` dedups pairs that share several intact
-    subsets.
+    Why s-subsets instead of single bands: with bands=10 over 60 bits
+    a single-band key is only 6 bits wide — 64 bucket values — so
+    candidate pairs grow O(n²/2^bits): measured ~195 M join rows at
+    50 000 docs (19× the sf0.1 wall for 10× the data). Joining on
+    s = min(m, ``max_subset``) band-value tuples (C(10,3)=120
+    keys/doc at s=3, the scheme of Manku et al., WWW'07 §3) widens
+    the key to s·bits + combo id: expected bucket size drops below 1
+    row, the join output collapses to ~the true pair set, and the
+    explode cost is a linear row factor on the (tiny) fingerprint
+    relation. Larger s only multiplies C(bands, s). The verify stays
+    a broadcast-free codegen popcount; ``distinct`` dedups pairs that
+    share several intact subsets.
     """
-    bits = SIMHASH_BITS // bands
+    bits = hash_bits // bands
     m = bands - hamming_max
     if m <= 0:
         raise ValueError(
             f"hamming_max={hamming_max} must be < bands={bands} for recall 1.0"
         )
-    # s = min(m, 3): s=3 is enough key width at any realistic corpus
-    # (2^18 buckets per combo); larger s just multiplies C(bands, s).
-    s = min(m, 3)
+    s = min(m, max_subset)
     combos = list(itertools.combinations(range(bands), s))
     assert s * bits + (len(combos)).bit_length() < 62  # packed key fits a long
 
     def _bval(i: int) -> Column:
-        return F.shiftright("simhash", i * bits).bitwiseAND(F.lit((1 << bits) - 1))
+        return F.shiftright(hash_col, i * bits).bitwiseAND(F.lit((1 << bits) - 1))
 
     keys = []
     for cid, combo in enumerate(combos):
@@ -349,32 +354,100 @@ def simhash_near_dup_pairs(
         for i in combo:
             k = F.shiftleft(k, bits).bitwiseOR(_bval(i))
         keys.append(k)
-    # localCheckpoint: the fingerprint relation (the expensive
-    # 60-aggregate scan) feeds BOTH sides of the self-join, and with
-    # the 120-key explode in between Catalyst no longer collapses the
-    # two sides into one reused exchange — without materializing it,
-    # the whole fingerprint pipeline executes twice (measured 2x wall
-    # at sf0.1/sf1). The relation is one long per doc — trivially
-    # materializable at any SF. eager localCheckpoint (the graph-ops
-    # idiom) instead of persist(): blocks are reclaimed when the
-    # DataFrame is GC'd, so repeated invocations in a long-lived
-    # session leave no storage-tab residue (r9 advice).
-    fp = simhash_fingerprints(docs, id_col, text_col, n).localCheckpoint(
-        eager=True
-    )
-    banded = fp.select(
-        F.col(id_col), "simhash", F.explode(F.array(*keys)).alias("_bkey")
+    # localCheckpoint: the fingerprint relation (an expensive scan)
+    # feeds BOTH sides of the self-join, and with the key explode in
+    # between Catalyst no longer collapses the two sides into one
+    # reused exchange — without materializing it, the whole
+    # fingerprint pipeline executes twice (measured 2x wall at
+    # sf0.1/sf1). The relation is one long per row — trivially
+    # materializable at any SF. Eager localCheckpoint instead of
+    # persist(): blocks are reclaimed when the DataFrame is GC'd, so
+    # repeated invocations in a long-lived session leave no
+    # storage-tab residue.
+    banded = fp.localCheckpoint(eager=True).select(
+        F.col(id_col), hash_col, *by, F.explode(F.array(*keys)).alias("_bkey")
     )
     lhs = banded.select(
-        F.col(id_col).alias("a"), F.col("simhash").alias("_ha"), "_bkey"
+        F.col(id_col).alias("a"), F.col(hash_col).alias("_ha"), *by, "_bkey"
     )
     rhs = banded.select(
-        F.col(id_col).alias("b"), F.col("simhash").alias("_hb"), "_bkey"
+        F.col(id_col).alias("b"), F.col(hash_col).alias("_hb"), *by, "_bkey"
     )
     return (
-        lhs.join(rhs, ["_bkey"])
+        lhs.join(rhs, ["_bkey", *by])
         .where(F.col("a") < F.col("b"))
-        .select("a", "b", hamming64(F.col("_ha"), F.col("_hb")).alias("hamming"))
+        .select(
+            "a", "b", hamming64(F.col("_ha"), F.col("_hb")).alias("hamming"), *by
+        )
         .where(F.col("hamming") <= hamming_max)
         .distinct()
+    )
+
+
+def simhash_near_dup_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    bands: int = 10,
+    hamming_max: int = 7,
+) -> DataFrame:
+    """SimHash near-dup pairs: ``hamming_band_pairs`` over the 60-bit
+    fingerprint with band-value triples, verify hamming ≤
+    ``hamming_max``. Returns (a, b, hamming)."""
+    return hamming_band_pairs(
+        simhash_fingerprints(docs, id_col, text_col, n),
+        id_col,
+        "simhash",
+        SIMHASH_BITS,
+        bands,
+        hamming_max,
+        max_subset=3,
+    )
+
+
+def cluster_survivors(
+    items: DataFrame,
+    id_col: str,
+    edges: DataFrame,
+    order: list[Column] | None = None,
+) -> DataFrame:
+    """One survivor per duplicate cluster: duplicate pairs
+    ``edges(a, b)`` (the shape every near-dup pair operator returns;
+    other columns are ignored) → connected components → each item
+    mapped to its cluster's survivor. Returns ``items`` plus
+    ``best_id`` and ``is_kept``; items no edge touches are singletons
+    that keep themselves.
+
+    Transitive closure matters: A≈B and B≈C must collapse to one
+    survivor even when A and C are not directly similar.
+
+    With ``order=None`` the survivor is the component label — the
+    minimum id — so no window and no extra shuffle. Otherwise the
+    survivor is the first member by ``order`` (columns of ``items``),
+    ties to the smallest id: one ``row_number`` window partitioned by
+    the component, joined back.
+    """
+    from .graph import connected_components
+
+    comp = connected_components(
+        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    ).toDF("_cid", "_comp")
+    mapped = items.join(comp, F.col(id_col) == F.col("_cid"), "left").select(
+        *items.columns, F.coalesce("_comp", id_col).alias("_grp")
+    )
+    if order is None:
+        out = mapped.withColumnRenamed("_grp", "best_id")
+    else:
+        w = W.partitionBy("_grp").orderBy(*order, F.col(id_col))
+        best = (
+            mapped.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .select("_grp", F.col(id_col).alias("best_id"))
+        )
+        out = mapped.join(best, "_grp")
+    return out.select(
+        *items.columns,
+        "best_id",
+        (F.col(id_col) == F.col("best_id")).alias("is_kept"),
     )

@@ -26,7 +26,6 @@ Scale notes per operator:
 from __future__ import annotations
 
 from collections import deque
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -63,14 +62,6 @@ def symmetric_edges(edges: DataFrame) -> DataFrame:
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-
-
-def vertices_of(edges: DataFrame) -> DataFrame:
-    # explode, not union — one upstream pass (see symmetric_edges)
-    return (
-        edges.select(F.explode(F.array("src", "dst")).alias("id"))
-        .distinct()
-    )
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -272,12 +263,13 @@ def label_propagation(
     round. Above the cap the distributed rounds below run unchanged;
     ``local_cap=0`` forces them."""
     # Materialize the (expensive) edge lineage exactly once and derive
-    # the vertex set from it — vertices_of(edges) would re-execute the
-    # upstream co-occurrence join a second time (the betweenness/CC
-    # lesson). Per-round label checkpoints are LAZY: each round's
-    # labels have a single consumer (the next round's join, or the
-    # caller's action), so materializing inside that consuming job
-    # halves the loop's job count without recomputation.
+    # the vertex set from it — deriving vertices from `edges` directly
+    # would re-execute the upstream co-occurrence join a second time
+    # (the betweenness/CC lesson). Per-round label checkpoints are
+    # LAZY: each round's labels have a single consumer (the next
+    # round's join, or the caller's action), so materializing inside
+    # that consuming job halves the loop's job count without
+    # recomputation.
     sym = symmetric_edges(edges).localCheckpoint(eager=True)
     if local_cap > 0:
         rows = sym.limit(local_cap + 1).collect()

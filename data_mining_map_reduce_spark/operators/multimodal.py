@@ -48,7 +48,7 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1133,71 +1133,26 @@ def media_near_dup_pairs(
     bands: int = 8,
     hamming_max: int = 6,
 ) -> DataFrame:
-    """Perceptual near-dup media pairs: Manku-style s-subset banding
-    over the 64-bit dHash (the simhash_near_dup_pairs scheme — see
-    operators/dedup.py:296 for the pigeonhole recall-1.0 argument and
-    the s-subset key-width math), verify popcount ≤ ``hamming_max``.
-    Fallback-hashed payloads (undecodable → exact md5 space) pair
-    only at Hamming 0, i.e. byte-identical content — the ``decoded``
-    flag joins as part of the band key so the two hash spaces never
-    cross. Returns (a, b, hamming, decoded).
+    """Perceptual near-dup media pairs: ``dedup.hamming_band_pairs``
+    over the 64-bit dHash with band-value pairs, verify popcount ≤
+    ``hamming_max``. Fallback-hashed payloads (undecodable → exact
+    md5 space) pair only at Hamming 0, i.e. byte-identical content —
+    the ``decoded`` flag joins as part of the band key so the two
+    hash spaces never cross. Returns (a, b, hamming, decoded)."""
+    from .dedup import hamming_band_pairs
 
-    Scale shape: the phash relation is one long per item (pinned
-    eagerly — it feeds both join sides through a 28-key explode);
-    candidates are band-bucketed, the verify is codegen popcount —
-    never an all-pairs join."""
-    import itertools as _it
-
-    bits = 64 // bands
-    m = bands - hamming_max
-    if m <= 0:
-        raise ValueError(
-            f"hamming_max={hamming_max} must be < bands={bands} for recall 1.0"
-        )
-    s = min(m, 2)
-    combos = list(_it.combinations(range(bands), s))
-
-    def _bval(i: int) -> Column:
-        return F.shiftright("phash", i * bits).bitwiseAND(F.lit((1 << bits) - 1))
-
-    keys = []
-    for cid, combo in enumerate(combos):
-        k: Column = F.lit(cid).cast("long")
-        for i in combo:
-            k = F.shiftleft(k, bits).bitwiseOR(_bval(i))
-        keys.append(k)
-
-    fp = perceptual_hashes(media).localCheckpoint(eager=True)
-    banded = fp.select(
+    pairs = hamming_band_pairs(
+        perceptual_hashes(media),
         "media_id",
         "phash",
-        "decoded",
-        F.explode(F.array(*keys)).alias("_bkey"),
-    )
-    lhs = banded.select(
-        F.col("media_id").alias("a"),
-        F.col("phash").alias("_ha"),
-        "decoded",
-        "_bkey",
-    )
-    rhs = banded.select(
-        F.col("media_id").alias("b"),
-        F.col("phash").alias("_hb"),
-        "decoded",
-        "_bkey",
-    )
-    from ..functions.hashing import hamming64
-
-    verified = (
-        lhs.join(rhs, ["_bkey", "decoded"])
-        .where(F.col("a") < F.col("b"))
-        .select(
-            "a", "b", hamming64(F.col("_ha"), F.col("_hb")).alias("hamming"),
-            "decoded",
-        )
+        64,
+        bands,
+        hamming_max,
+        max_subset=2,
+        by=("decoded",),
     )
     radius = F.when(F.col("decoded"), F.lit(hamming_max)).otherwise(F.lit(0))
-    return verified.where(F.col("hamming") <= radius).distinct()
+    return pairs.where(F.col("hamming") <= radius)
 
 
 def media_dedup_canonical(
@@ -1205,51 +1160,25 @@ def media_dedup_canonical(
     bands: int = 8,
     hamming_max: int = 6,
 ) -> DataFrame:
-    """X38 completion (r17, mirroring X16's dedup_keep_best_docs):
-    perceptual near-dup pairs → connected components → ONE canonical
-    item per perceptual cluster, keep = largest payload (most bytes —
-    the highest-fidelity copy of a re-encoded/resized family), ties
-    to the smallest media_id. Transitive closure matters: A≈A' and
-    A'≈A'' must collapse to one survivor even when A, A'' drift past
-    the pairing radius. Fallback-space (undecodable) clusters contain
-    only byte-identical content by construction (see
-    media_near_dup_pairs), so their keep rule degenerates to the
-    exact-dup canonical. Every item gets a row; singletons keep
-    themselves. Returns (media_id, best_id, is_kept, n_bytes).
-
-    Scale shape: pairs are band-bucketed (never all-pairs), the
-    component relation is edge-bounded min-label propagation
-    (graph.py:106), and the keep-best argmax is one window
-    partitioned by cluster id — the dedup_keep_best_docs plan on the
-    media axis."""
-    from .graph import connected_components
+    """Perceptual near-dup pairs → ``dedup.cluster_survivors`` → ONE
+    canonical item per perceptual cluster, keep = largest payload
+    (most bytes — the highest-fidelity copy of a re-encoded/resized
+    family), ties to the smallest media_id. Fallback-space
+    (undecodable) clusters contain only byte-identical content by
+    construction (see media_near_dup_pairs), so their keep rule
+    degenerates to the exact-dup canonical. Every item gets a row;
+    singletons keep themselves. Returns (media_id, best_id, is_kept,
+    n_bytes)."""
+    from .dedup import cluster_survivors
 
     pairs = media_near_dup_pairs(media, bands=bands, hamming_max=hamming_max)
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    comp = connected_components(edges)
     sized = media.select(
         "media_id",
         F.coalesce(F.length("payload"), F.lit(0)).cast("long").alias("n_bytes"),
     )
-    mapped = (
-        sized.join(comp, sized.media_id == comp.id, "left")
-        .select(
-            "media_id",
-            F.coalesce("component", "media_id").alias("_grp"),
-            "n_bytes",
-        )
-    )
-    w = Window.partitionBy("_grp").orderBy(
-        F.col("n_bytes").desc(), F.col("media_id")
-    )
-    best = (
-        mapped.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("_grp", F.col("media_id").alias("best_id"))
-    )
-    return mapped.join(best, "_grp").select(
+    return cluster_survivors(
+        sized,
         "media_id",
-        "best_id",
-        (F.col("media_id") == F.col("best_id")).alias("is_kept"),
-        "n_bytes",
-    )
+        pairs,
+        order=[F.col("n_bytes").desc()],
+    ).select("media_id", "best_id", "is_kept", "n_bytes")

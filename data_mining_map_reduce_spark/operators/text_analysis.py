@@ -141,26 +141,16 @@ _LANG_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
-def language_pred_exprs(text_col) -> "tuple":
-    """(pred_lang, best_score) COLUMN expressions over a text column —
-    exposed separately so composed pipelines (corpus_curation_funnel)
-    can evaluate the classifier inside an existing projection instead
-    of paying a second scan + join of the documents table.
-
-    Prefer ``language_pred_exprs_from_tokens`` over an already-
-    tokenized column when composing with other token consumers: the
-    HOF scoring tree runs interpreted, and every reference to an
-    inlined ``tokenize(normalize(text))`` re-runs the regex split —
-    a token COLUMN is a cheap bound reference (r17, the doc_shingles
-    stacked-projection idiom)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return language_pred_exprs_from_tokens(tokenize(normalize(c)))
-
-
 def language_pred_exprs_from_tokens(toks) -> "tuple":
-    """``language_pred_exprs`` over an existing token-array column or
-    expression — identical scoring (profile-coverage argmax,
-    first-profile tie-break)."""
+    """(pred_lang, best_score) COLUMN expressions over an existing
+    token-array column or expression: profile-coverage argmax,
+    first-profile tie-break. Exposed so composed pipelines
+    (corpus_curation_funnel) can evaluate the classifier inside an
+    existing projection instead of paying a second scan + join of
+    the documents table. Pass a token COLUMN, not an inlined
+    ``tokenize(normalize(text))``: the HOF scoring tree runs
+    interpreted, and every reference to an inlined tokenize re-runs
+    the regex split."""
     toks = F.col(toks) if isinstance(toks, str) else toks
     n_tok = F.greatest(F.size(toks), F.lit(1)).cast("double")
 

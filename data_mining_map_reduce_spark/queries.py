@@ -2269,6 +2269,22 @@ def near_dup_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lsh_doc_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup doc pairs at Jaccard >= 0.5 from 64x32 MinHash banding
+    over word-3-gram shingles, exact-verified → (a, b, ...). The miss
+    probability per true pair is ~(1 - 0.25)^32 ~ 1e-4 at s = 0.5.
+    max_bucket=None so the DuckDB oracle replays banding exactly (see
+    minhash_lsh_pairs_q); shingle buckets are high-cardinality, so no
+    bucket approaches a cap even at sf10."""
+    from .operators.dedup import doc_shingles
+    from .operators.similarity import minhash_lsh_pairs
+
+    return minhash_lsh_pairs(
+        doc_shingles(docs), "doc_id", "shingles",
+        threshold=0.5, num_hashes=64, bands=32, max_bucket=None,
+    )
+
+
 # Near-dup scale path: MinHash LSH over the same shingle sets
 # (64 hashes, 32 bands x 2 rows — collision prob ~1.0 at s=0.5).
 # FULL oracle via _minhash_oracle_sql (same replayable hash family);
@@ -2283,15 +2299,8 @@ def near_dup_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def near_dup_docs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import doc_shingles
-    from .operators.similarity import minhash_lsh_pairs
-
     docs = load_table(spark, sf_dir, "documents")
-    # max_bucket=None: oracle fidelity (see minhash_lsh_pairs_q).
-    return minhash_lsh_pairs(
-        doc_shingles(docs), "doc_id", "shingles",
-        threshold=0.5, num_hashes=64, bands=32, max_bucket=None,
-    ).orderBy("a", "b")
+    return _lsh_doc_pairs(docs).orderBy("a", "b")
 
 
 # SimHash near-dup pairs: 60-bit md5-derived fingerprints, 10x6-bit
@@ -2485,15 +2494,14 @@ def _corpus_funnel_impl(
     quality_model: float | None = None,
 ) -> DataFrame:
     from .functions.text import normalize, tokenize
-    from .operators.dedup import doc_shingle_pairs, doc_shingles, exact_duplicate_groups
-    from .operators.similarity import exact_jaccard_pairs, minhash_lsh_pairs
+    from .operators.dedup import doc_shingle_pairs, exact_duplicate_groups
+    from .operators.similarity import exact_jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    # Pin the exact-dup verdict relation (r15 plan audit): TWO
-    # consumers (the near-dup stage's docs1 pre-filter and the final
-    # flags join) otherwise each re-run the full-corpus normalize +
-    # groupBy behind exact_duplicate_groups. Slim (doc_id + bool), so
-    # the r12 slim-vs-fat rule allows the RDD pin.
+    # Pin the exact-dup verdict relation: TWO consumers (the near-dup
+    # stage's docs1 pre-filter and the final flags join) otherwise
+    # each re-run the full-corpus normalize + groupBy behind
+    # exact_duplicate_groups. Slim (doc_id + bool), so cheap to pin.
     exact = (
         exact_duplicate_groups(docs)
         .select("doc_id", (F.col("doc_id") == F.col("canonical_id")).alias("_k1"))
@@ -2504,15 +2512,8 @@ def _corpus_funnel_impl(
         # Scale path: banded LSH candidates + exact verify. Precision
         # is 1.0 by construction (the verify join applies the same
         # threshold), so _nd drops a SUBSET of the exact variant's
-        # drops; 64x32 banding makes the miss probability per true
-        # pair ~(1 - 0.25)^32 ~ 1e-4 at s = 0.5. max_bucket=None so
-        # the DuckDB oracle replays banding exactly (near_dup_docs_lsh
-        # precedent); shingle buckets are high-cardinality so no
-        # bucket approaches the cap even at sf10.
-        pairs = minhash_lsh_pairs(
-            doc_shingles(docs1), "doc_id", "shingles",
-            threshold=0.5, num_hashes=64, bands=32, max_bucket=None,
-        )
+        # drops.
+        pairs = _lsh_doc_pairs(docs1)
     else:
         pairs = exact_jaccard_pairs(
             doc_shingle_pairs(docs1), "doc_id", "shingle", threshold=0.5
@@ -2530,7 +2531,7 @@ def _corpus_funnel_impl(
     # Threshold expressions mirror doc_quality_stats/language_id
     # exactly (same rounding before compare — the oracle contract).
     # The normalized token array gets its own stacked projection
-    # (r17, the doc_shingles idiom): the quality + language
+    # (the doc_shingles idiom): the quality + language
     # expressions reference it ~25 times and run interpreted, so an
     # inlined tokenize re-ran the regex split per reference per row.
     toks = F.col("_toks")
@@ -2566,10 +2567,9 @@ def _corpus_funnel_impl(
     names = ["raw", "exact_dedup", "near_dedup", "quality", "lang_en"]
     conds = [k1, k2, k3, k4]
     if quality_model is not None:
-        # X36 × X23 (r17, verdict task 4): model-based quality
-        # stacked after the heuristic stages — real pipelines run
-        # heuristic quality -> model-based quality -> (semantic)
-        # dedup. ``quality_model`` is the Pareto alpha of the GPT-3
+        # Model-based quality stacked after the heuristic stages —
+        # real pipelines run heuristic quality -> model-based quality
+        # -> (semantic) dedup. ``quality_model`` is the Pareto alpha of the GPT-3
         # keep rule. The classifier trains on the FULL corpus (the
         # recipe's weak-label contract, see quality_model.py — runs
         # its bounded eager fit at construction) and the stage keeps
@@ -2585,9 +2585,8 @@ def _corpus_funnel_impl(
         conds.append(conds[-1] & F.coalesce(F.col("_mq"), F.lit(False)))
         names.append("model_quality")
     if semantic is not None:
-        # X32 × X23 (r16): stack embedding-level SemDeDup AFTER the
-        # text stages — real pipelines dedup semantically on what
-        # survives near-dup + quality + language, not on the raw
+        # Stack embedding-level SemDeDup AFTER the text stages — real
+        # pipelines dedup semantically on what survives near-dup + quality + language, not on the raw
         # corpus. ``semantic`` is the cosine threshold. The flags
         # relation is slim (id + bools + one int) and its survivor
         # set feeds the iterative quantizer (one action per Lloyd
@@ -4520,12 +4519,12 @@ def media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# X38 completion (r17, verdict task 5): pairs → connected components
-# → keep-best canonical per perceptual cluster (largest payload, ties
-# to smallest id) — dedup_keep_best_docs on the media axis. Rows-only
-# by nature (the image decoder is not SQL-expressible); the planted-
-# cluster collapse, fallback-space purity, and keep rule are
-# pytest-pinned (tests/test_multimodal.py).
+# Perceptual pairs → connected components → keep-best canonical per
+# perceptual cluster (largest payload, ties to smallest id) —
+# dedup_keep_best_docs on the media axis. Rows-only by nature (the
+# image decoder is not SQL-expressible); the planted-cluster
+# collapse, fallback-space purity, and keep rule are pytest-pinned
+# (tests/test_multimodal.py).
 @query("media_dedup_canonical")
 def media_dedup_canonical_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import media_dedup_canonical
@@ -4533,6 +4532,18 @@ def media_dedup_canonical_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _media_with_probes(spark, sf_dir)
     return media_dedup_canonical(media, bands=8, hamming_max=6).orderBy(
         "media_id"
+    )
+
+
+def _exact_dup_edges(docs: DataFrame) -> DataFrame:
+    """(a, b) edges joining every exact duplicate (same normalized
+    text) to its group's min doc_id."""
+    from .operators.dedup import exact_duplicate_groups
+
+    return (
+        exact_duplicate_groups(docs)
+        .where(F.col("doc_id") != F.col("canonical_id"))
+        .select(F.col("doc_id").alias("a"), F.col("canonical_id").alias("b"))
     )
 
 
@@ -4574,27 +4585,20 @@ def media_dedup_canonical_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import doc_shingle_pairs, exact_duplicate_groups
-    from .operators.graph import connected_components
+    from .operators.dedup import cluster_survivors, doc_shingle_pairs
     from .operators.similarity import exact_jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    exact = exact_duplicate_groups(docs)
-    exact_edges = exact.where(F.col("doc_id") != F.col("canonical_id")).select(
-        F.col("doc_id").alias("src"), F.col("canonical_id").alias("dst")
+    near = exact_jaccard_pairs(
+        doc_shingle_pairs(docs), "doc_id", "shingle", threshold=0.5
     )
-    pairs = doc_shingle_pairs(docs)
-    near_edges = exact_jaccard_pairs(
-        pairs, "doc_id", "shingle", threshold=0.5
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    comp = connected_components(exact_edges.unionByName(near_edges))
     return (
-        docs.select("doc_id")
-        .join(comp, docs.doc_id == comp.id, "left")
-        .select(
+        cluster_survivors(
+            docs.select("doc_id"),
             "doc_id",
-            F.coalesce("component", "doc_id").alias("canonical_id"),
+            _exact_dup_edges(docs).unionByName(near.select("a", "b")),
         )
+        .select("doc_id", F.col("best_id").alias("canonical_id"))
         .orderBy("doc_id")
     )
 
@@ -4963,7 +4967,7 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X16 scale path: the dedup pipeline with LSH-candidate near-dup
+# Scale path: the dedup pipeline with LSH-candidate near-dup
 # edges instead of the exact all-pairs plan. At 100 TB the exact
 # prefix-filtered self-join is the ORACLE TWIN (dedup_canonical_docs,
 # recursive-CTE verified); this variant is what actually ships —
@@ -4972,9 +4976,9 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fabricate them. Consequence (pytest-asserted): its clusters are a
 # REFINEMENT of the exact pipeline's — no false merges, ever.
 # Fully oracle-backed: the md5 minhash family + bucket enumeration
-# replays the banding, and pointer-jumping CC (r11) replaced the
-# recursive CTE whose Σ|C|² reach blow-up pinned this oracle to
-# sf0.01.
+# replays the banding, and pointer-jumping CC keeps the oracle
+# linear in the edge count (a recursive-CTE closure's Σ|C|² reach
+# blow-up would pin it to sf0.01).
 # ---------------------------------------------------------------------------
 @query(
     "dedup_canonical_docs_lsh",
@@ -5007,38 +5011,28 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_canonical_docs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import doc_shingles, exact_duplicate_groups
-    from .operators.graph import connected_components
-    from .operators.similarity import minhash_lsh_pairs
+    from .operators.dedup import cluster_survivors
 
     docs = load_table(spark, sf_dir, "documents")
-    exact = exact_duplicate_groups(docs)
-    exact_edges = exact.where(F.col("doc_id") != F.col("canonical_id")).select(
-        F.col("doc_id").alias("src"), F.col("canonical_id").alias("dst")
-    )
-    near_edges = minhash_lsh_pairs(
-        doc_shingles(docs), "doc_id", "shingles",
-        threshold=0.5, num_hashes=64, bands=32,
-        max_bucket=None,  # oracle fidelity (see minhash_lsh_pairs_q)
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    comp = connected_components(exact_edges.unionByName(near_edges))
     return (
-        docs.select("doc_id")
-        .join(comp, docs.doc_id == comp.id, "left")
-        .select(
+        cluster_survivors(
+            docs.select("doc_id"),
             "doc_id",
-            F.coalesce("component", "doc_id").alias("canonical_id"),
+            _exact_dup_edges(docs).unionByName(
+                _lsh_doc_pairs(docs).select("a", "b")
+            ),
         )
+        .select("doc_id", F.col("best_id").alias("canonical_id"))
         .orderBy("doc_id")
     )
 
 
 # ---------------------------------------------------------------------------
-# X16 completion (r16): QUALITY-AWARE canonical selection. The
-# min-id canonical is the oracle-friendly convention; what a real
-# pipeline keeps from each duplicate cluster is its BEST member —
-# here the longest document (n_tokens desc, doc_id tie-break: more
-# content survives, deterministic). Same LSH edges + CC as
+# QUALITY-AWARE canonical selection. The min-id canonical is the
+# oracle-friendly convention; what a real pipeline keeps from each
+# duplicate cluster is its BEST member — here the longest document
+# (n_tokens desc, doc_id tie-break: more content survives,
+# deterministic). Same LSH edges + CC as
 # dedup_canonical_docs_lsh, plus one window argmax per component —
 # all replayed in SQL, FULL oracle.
 # ---------------------------------------------------------------------------
@@ -5098,50 +5092,23 @@ def dedup_canonical_docs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.text import normalize, tokenize
-    from .operators.dedup import doc_shingles, exact_duplicate_groups
-    from .operators.graph import connected_components
-    from .operators.similarity import minhash_lsh_pairs
+    from .operators.dedup import cluster_survivors
 
     docs = load_table(spark, sf_dir, "documents")
-    exact = exact_duplicate_groups(docs)
-    exact_edges = exact.where(F.col("doc_id") != F.col("canonical_id")).select(
-        F.col("doc_id").alias("src"), F.col("canonical_id").alias("dst")
-    )
-    near_edges = minhash_lsh_pairs(
-        doc_shingles(docs), "doc_id", "shingles",
-        threshold=0.5, num_hashes=64, bands=32,
-        max_bucket=None,  # oracle fidelity (see minhash_lsh_pairs_q)
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    comp = connected_components(exact_edges.unionByName(near_edges))
-    mapped = (
-        docs.select(
-            "doc_id",
-            F.size(tokenize(normalize(F.col("text")))).cast("long").alias(
-                "n_tokens"
-            ),
-        )
-        .join(comp, F.col("doc_id") == F.col("id"), "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("grp"),
-            "n_tokens",
-        )
-    )
-    w = Window.partitionBy("grp").orderBy(
-        F.col("n_tokens").desc(), F.col("doc_id")
-    )
-    best = (
-        mapped.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("grp", F.col("doc_id").alias("best_id"))
+    sized = docs.select(
+        "doc_id",
+        F.size(tokenize(normalize(F.col("text")))).cast("long").alias("n_tokens"),
     )
     return (
-        mapped.join(best, "grp")
-        .select(
+        cluster_survivors(
+            sized,
             "doc_id",
-            "best_id",
-            (F.col("doc_id") == F.col("best_id")).alias("is_kept"),
+            _exact_dup_edges(docs).unionByName(
+                _lsh_doc_pairs(docs).select("a", "b")
+            ),
+            order=[F.col("n_tokens").desc()],
         )
+        .select("doc_id", "best_id", "is_kept")
         .orderBy("doc_id")
     )
 
@@ -5155,6 +5122,50 @@ def dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scale property: no shuffle at all — a codegen projection decides
 # each row's split at scan time.
 # ---------------------------------------------------------------------------
+def _split_tagged(docs: DataFrame) -> DataFrame:
+    """(doc_id, split): 'train' for 80% of doc_ids, 'test' for the
+    rest, by the affine hash ((1103515245 * id + 12345) mod p) mod 100
+    that _SPLIT_SQL replays."""
+    # pmod the key through the modulus BEFORE the affine multiply:
+    # 1103515245 * (doc_id % p) peaks at ~2.4e18 < int64 max, so the
+    # projection can never overflow under ANSI mode no matter how
+    # large doc_id grows; folding after the multiply would throw for
+    # doc_id > ~8.3e9 (identical residues mod p for doc_id >= 0).
+    bucket = F.pmod(
+        F.pmod(
+            F.lit(1103515245) * F.pmod(F.col("doc_id"), F.lit(2147483647))
+            + F.lit(12345),
+            F.lit(2147483647),
+        ),
+        F.lit(100),
+    )
+    return docs.select(
+        "doc_id", F.when(bucket < 80, "train").otherwise("test").alias("split")
+    )
+
+
+def _split_grams(docs: DataFrame, tagged: DataFrame) -> DataFrame:
+    """(doc_id, split, g): each doc's word-3-gram shingles compressed
+    to the 60-bit md5-derived hash, tagged with the doc's split.
+
+    Hashing before the pin means the distinct and the overlap joins
+    shuffle 8-byte bigints instead of raw 3-gram strings; the oracle
+    replays the identical hash (even a collision collides on both
+    engines), so the driver row stays a FULL value check. The lazy
+    checkpoint lets every consumer share one (regex-heavy) shingle
+    build and documents scan instead of re-running it per consumer.
+    """
+    from .functions.hashing import md5_hash60
+    from .operators.dedup import doc_shingle_pairs
+
+    return (
+        doc_shingle_pairs(docs)
+        .join(tagged, "doc_id")
+        .select("doc_id", "split", md5_hash60("shingle").alias("g"))
+        .localCheckpoint(eager=False)
+    )
+
+
 @query(
     "train_test_split_counts",
     """
@@ -5170,22 +5181,8 @@ def dedup_keep_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def train_test_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # pmod the key through the modulus BEFORE the affine multiply:
-    # 1103515245 * (doc_id % p) peaks at ~2.4e18 < int64 max, so the
-    # projection can never overflow under ANSI mode no matter how
-    # large doc_id grows; folding after the multiply would throw for
-    # doc_id > ~8.3e9 (identical residues mod p for doc_id >= 0).
-    bucket = F.pmod(
-        F.lit(1103515245) * F.pmod(F.col("doc_id"), F.lit(2147483647))
-        + F.lit(12345),
-        F.lit(2147483647),
-    )
-    bucket = F.pmod(bucket, F.lit(100))
     return (
-        docs.select(
-            "doc_id",
-            F.when(bucket < 80, "train").otherwise("test").alias("split"),
-        )
+        _split_tagged(docs)
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -5285,17 +5282,13 @@ def window_heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X27: benchmark-contamination detection — the train/test overlap
-# check every LLM data pipeline runs before evaluation: a test-split
+# Benchmark-contamination detection — the train/test overlap check
+# every LLM data pipeline runs before evaluation: a test-split
 # document is contaminated to the degree its word-3-gram shingles
-# also appear ANYWHERE in the train split. Composes the
-# deterministic affine-hash split (X21) with the shared shingle scan;
+# also appear ANYWHERE in the train split. Composes the deterministic
+# affine-hash split with the hashed shingle relation (_split_grams);
 # one exploded-shingle join against the distinct train-gram set.
-# Shingles are compressed to 60-bit md5-derived bigints BEFORE the
-# join on BOTH engines (md5 is bit-identical in Spark and DuckDB), so
-# the distinct + overlap join shuffle 8-byte keys instead of raw
-# 3-gram strings; a hash collision collides identically on both
-# sides, so the driver row stays a FULL value check. FULL oracle.
+# FULL oracle.
 # ---------------------------------------------------------------------------
 _SPLIT_SQL = (
     "CASE WHEN ((1103515245 * (doc_id % 2147483647) + 12345)"
@@ -5337,36 +5330,10 @@ _SPLIT_SQL = (
     """,
 )
 def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.hashing import md5_hash60
-    from .operators.dedup import doc_shingle_pairs
-
     docs = load_table(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        F.pmod(
-            F.lit(1103515245) * F.pmod(F.col("doc_id"), F.lit(2147483647))
-            + F.lit(12345),
-            F.lit(2147483647),
-        ),
-        F.lit(100),
-    )
-    tagged = docs.select(
-        "doc_id", F.when(bucket < 80, "train").otherwise("test").alias("split")
-    )
-    # Shingles are compressed to the 60-bit md5-derived hash BEFORE
-    # the checkpoint, so the distinct and the overlap join shuffle
-    # 8-byte bigints instead of raw 3-gram strings — the oracle
-    # replays the identical hash (even a collision collides on both
-    # engines), so the driver row stays a FULL value check.
-    # Lazy checkpoint: the tagged, hashed shingle frame feeds BOTH the
-    # train-gram distinct and the test side — without it the
-    # (regex-heavy) shingle build and the documents scan execute
-    # twice (4 parquet scans measured; 2 after).
-    sh = (
-        doc_shingle_pairs(docs)
-        .join(tagged, "doc_id")
-        .select("doc_id", "split", md5_hash60("shingle").alias("g"))
-        .localCheckpoint(eager=False)
-    )
+    # pinned: feeds the train-gram distinct AND the test side (4
+    # parquet scans measured unpinned; 2 pinned)
+    sh = _split_grams(docs, _split_tagged(docs))
     train_grams = (
         sh.where(F.col("split") == "train")
         .select("g")
@@ -5395,8 +5362,8 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Benchmark DEcontamination (r16, completing X27 the way
-# pii_redact_stats completes pii_scan_stats): given the train/test
+# Benchmark DEcontamination (completing contamination_ngram_overlap
+# the way pii_redact_stats completes pii_scan_stats): given the train/test
 # overlap scores, actually remove contaminated training documents and
 # report what the removal cost — per-source kept/dropped doc and
 # whitespace-token counts at overlap threshold 0.5 — plus a
@@ -5407,7 +5374,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # separates the planted near-dup contamination (scores >= 0.545 at
 # sf0.01) from background trigram overlap (<= 0.43) with margin on
 # both sides. Everything is integer counts over the same md5-hashed
-# gram keys as X27 — FULL oracle.
+# gram keys as contamination_ngram_overlap — FULL oracle.
 # ---------------------------------------------------------------------------
 def _decontaminated_corpus_stats_impl(
     docs: DataFrame, threshold: float = 0.5
@@ -5415,30 +5382,12 @@ def _decontaminated_corpus_stats_impl(
     """Shared by the registered query and the planted-probe pytest
     (tests/test_text_cf.py), which injects a synthetic corpus with a
     train doc copying a test doc verbatim and pins the drop."""
-    from .functions.hashing import md5_hash60
     from .functions.text import tokenize
-    from .operators.dedup import doc_shingle_pairs
 
-    bucket = F.pmod(
-        F.pmod(
-            F.lit(1103515245) * F.pmod(F.col("doc_id"), F.lit(2147483647))
-            + F.lit(12345),
-            F.lit(2147483647),
-        ),
-        F.lit(100),
-    )
-    tagged = docs.select(
-        "doc_id", F.when(bucket < 80, "train").otherwise("test").alias("split")
-    )
-    # One checkpointed (doc_id, split, g) relation feeds the benchmark
-    # gram set, the train scoring join, AND the residual re-scan —
-    # the X27 pin, now with three consumers.
-    sh = (
-        doc_shingle_pairs(docs)
-        .join(tagged, "doc_id")
-        .select("doc_id", "split", md5_hash60("shingle").alias("g"))
-        .localCheckpoint(eager=False)
-    )
+    tagged = _split_tagged(docs)
+    # the pinned grams feed the benchmark gram set, the train scoring
+    # join AND the residual re-scan
+    sh = _split_grams(docs, tagged)
     bench = (
         sh.where(F.col("split") == "test")
         .select("g")
@@ -5463,7 +5412,7 @@ def _decontaminated_corpus_stats_impl(
     # Every train doc, its source and token count, and its drop
     # verdict (docs too short to shingle have no score — overlap 0,
     # kept). Slim (id, source, int, bool) and consumed twice (rollup
-    # + the kept-set re-scan), so pinned per the r12 slim-vs-fat rule.
+    # + the kept-set re-scan), so pinned.
     flagged = (
         tagged.where(F.col("split") == "train")
         .join(

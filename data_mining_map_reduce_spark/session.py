@@ -28,23 +28,20 @@ def _host_heap() -> str:
 
 def get_spark(
     app_name: str = "data_mining_map_reduce_spark",
-    cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
     On a real cluster the ``master`` comes from spark-submit; here we
-    pin ``local[cpus]``. ``spark.sql.shuffle.partitions`` defaults to
-    2x cores locally — on a cluster you'd size it so post-shuffle
-    partitions land in the 64-256 MiB range (AQE coalesces down).
+    pin ``local[DEFAULT_CPUS]``. ``spark.sql.shuffle.partitions`` is
+    the core count, at least 8 — on a cluster you'd size it so
+    post-shuffle partitions land in the 64-256 MiB range (AQE
+    coalesces down).
     """
-    cpus = cpus or DEFAULT_CPUS
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(DEFAULT_CPUS, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -1,3 +1,3 @@
-from .catalog import TABLES, load_table, load_tables, register_views
+from .catalog import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table"]

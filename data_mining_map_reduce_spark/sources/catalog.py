@@ -13,9 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-# Pinned schemas for the TPC-H-ish testdata (TESTDATA.md). Parquet
-# already carries these types; pinning documents the contract and lets
-# readers fail fast on drift.
+# Schemas of the TPC-H-ish testdata (TESTDATA.md). Batch reads take
+# their types from the parquet files; this map is the table-name check
+# in load_table and the schema a file stream over a table is read with
+# (streaming sources cannot infer one).
 TABLES: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -110,11 +111,6 @@ TABLES: dict[str, T.StructType] = {
     ),
 }
 
-# Small dimension tables safe to broadcast in joins at any scale
-# factor (region/nation are fixed-cardinality in TPC-H; part/supplier
-# stay small relative to the fact tables).
-BROADCASTABLE = {"region", "nation", "supplier", "part", "customer"}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table. Parquet scans get column pruning and
@@ -141,13 +137,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

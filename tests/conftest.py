@@ -10,7 +10,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests")
     yield s
 
 

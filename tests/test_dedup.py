@@ -4,12 +4,16 @@ reference's LSH grading (A3 PDF §4.1.4 accuracy >= 0.8)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_mining_map_reduce_spark.operators.dedup import (
     doc_shingles,
     exact_duplicate_groups,
     fingerprint_overlap_pairs,
+    hamming_band_pairs,
     simhash_near_dup_pairs,
     winnow_fingerprints,
 )
@@ -316,3 +320,57 @@ def test_corpus_curation_funnel_lsh_refines_exact(spark, sf_dir):
     # corpus: identical near-dedup survivors here (deterministic md5
     # family — a fixed outcome, not a flaky sample).
     assert lsh[2].n_docs == exact[2].n_docs
+
+
+@pytest.mark.parametrize(
+    "hash_bits, bands, radius, max_subset, by",
+    [
+        (60, 10, 7, 3, ()),
+        (64, 8, 6, 2, ()),
+        (64, 8, 6, 2, ("grp",)),
+    ],
+)
+def test_hamming_band_pairs_equals_brute_force(
+    spark, hash_bits, bands, radius, max_subset, by
+):
+    """Pigeonhole banding has recall 1.0 and the popcount verify has
+    precision 1.0, so the result is exactly the all-pairs set within
+    the radius (restricted to equal ``by`` values). Each random
+    fingerprint gets variants at 0..radius+3 random flipped bits and
+    variants at radius and radius+1 bits flipped in distinct bands —
+    the fewest intact bands a pair within the radius can have."""
+    rng = random.Random(hash_bits * 100 + len(by))
+    width = hash_bits // bands
+    vals = []
+    for _ in range(25):
+        base = rng.getrandbits(hash_bits)
+        vals.append(base)
+        for _ in range(2):
+            flips = rng.sample(range(hash_bits), rng.randint(0, radius + 3))
+            vals.append(base ^ sum(1 << i for i in flips))
+        for n_flips in (radius, radius + 1):
+            flips = [
+                band * width + rng.randrange(width)
+                for band in rng.sample(range(bands), n_flips)
+            ]
+            vals.append(base ^ sum(1 << i for i in flips))
+
+    def signed(v):  # 64-bit values ride a Spark long as two's complement
+        return v - (1 << 64) if v >= (1 << 63) else v
+
+    rows = [(i, signed(v), rng.randint(0, 1)) for i, v in enumerate(vals)]
+    fp = spark.createDataFrame(rows, "id long, h long, grp int")
+    got = {
+        (r.a, r.b, r.hamming)
+        for r in hamming_band_pairs(
+            fp, "id", "h", hash_bits, bands, radius, max_subset, by=by
+        ).collect()
+    }
+    want = set()
+    for i, vi, gi in rows:
+        for j, vj, gj in rows:
+            d = bin((vi ^ vj) & ((1 << 64) - 1)).count("1")
+            if i < j and d <= radius and (not by or gi == gj):
+                want.add((i, j, d))
+    assert len(want) > 20
+    assert got == want
