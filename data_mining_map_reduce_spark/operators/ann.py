@@ -676,7 +676,9 @@ def semantic_dedup(
         max_cluster_rows=max_cluster_rows,
         seed=seed,
     )
-    return cluster_survivors(emb.select(id_col), id_col, pairs).select(id_col, F.col("best_id").alias("canonical_id"), "is_kept")
+    return cluster_survivors(emb.select(id_col), id_col, pairs).select(
+        id_col, F.col("best_id").alias("canonical_id"), "is_kept"
+    )
 
 
 def _first_vec(emb: DataFrame, vec_col: str):

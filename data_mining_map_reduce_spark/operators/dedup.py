@@ -303,7 +303,6 @@ def hamming_band_pairs(
     hash_bits: int,
     bands: int,
     hamming_max: int,
-    max_subset: int,
     by: tuple[str, ...] = (),
 ) -> DataFrame:
     """All pairs of ``fp`` rows whose ``hash_bits``-wide fingerprints
@@ -326,8 +325,8 @@ def hamming_band_pairs(
     a single-band key is only 6 bits wide — 64 bucket values — so
     candidate pairs grow O(n²/2^bits): measured ~195 M join rows at
     50 000 docs (19× the sf0.1 wall for 10× the data). Joining on
-    s = min(m, ``max_subset``) band-value tuples (C(10,3)=120
-    keys/doc at s=3, the scheme of Manku et al., WWW'07 §3) widens
+    s = min(m, 3) band-value tuples (C(10,3)=120 keys/doc at s=3,
+    the scheme of Manku et al., WWW'07 §3) widens
     the key to s·bits + combo id: expected bucket size drops below 1
     row, the join output collapses to ~the true pair set, and the
     explode cost is a linear row factor on the (tiny) fingerprint
@@ -341,7 +340,9 @@ def hamming_band_pairs(
         raise ValueError(
             f"hamming_max={hamming_max} must be < bands={bands} for recall 1.0"
         )
-    s = min(m, max_subset)
+    # s = min(m, 3): s=3 is enough key width at any realistic corpus
+    # (2^18 buckets per combo); larger s just multiplies C(bands, s).
+    s = min(m, 3)
     combos = list(itertools.combinations(range(bands), s))
     assert s * bits + (len(combos)).bit_length() < 62  # packed key fits a long
 
@@ -402,7 +403,6 @@ def simhash_near_dup_pairs(
         SIMHASH_BITS,
         bands,
         hamming_max,
-        max_subset=3,
     )
 
 

@@ -1148,7 +1148,6 @@ def media_near_dup_pairs(
         64,
         bands,
         hamming_max,
-        max_subset=2,
         by=("decoded",),
     )
     radius = F.when(F.col("decoded"), F.lit(hamming_max)).otherwise(F.lit(0))

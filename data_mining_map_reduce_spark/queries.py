@@ -2569,13 +2569,14 @@ def _corpus_funnel_impl(
     if quality_model is not None:
         # Model-based quality stacked after the heuristic stages —
         # real pipelines run heuristic quality -> model-based quality
-        # -> (semantic) dedup. ``quality_model`` is the Pareto alpha of the GPT-3
-        # keep rule. The classifier trains on the FULL corpus (the
-        # recipe's weak-label contract, see quality_model.py — runs
-        # its bounded eager fit at construction) and the stage keeps
-        # survivors whose md5-Pareto draw clears their score. With
-        # the None default this branch is never entered and every
-        # existing funnel plan is untouched.
+        # -> (semantic) dedup. ``quality_model`` is the Pareto alpha
+        # of the GPT-3 keep rule. The classifier trains on the FULL
+        # corpus (the recipe's weak-label contract, see
+        # quality_model.py — runs its bounded eager fit at
+        # construction) and the stage keeps survivors whose
+        # md5-Pareto draw clears their score. With the None default
+        # this branch is never entered and every existing funnel plan
+        # is untouched.
         from .operators.quality_model import quality_classifier_scores
 
         mq = quality_classifier_scores(
@@ -2586,8 +2587,9 @@ def _corpus_funnel_impl(
         names.append("model_quality")
     if semantic is not None:
         # Stack embedding-level SemDeDup AFTER the text stages — real
-        # pipelines dedup semantically on what survives near-dup + quality + language, not on the raw
-        # corpus. ``semantic`` is the cosine threshold. The flags
+        # pipelines dedup semantically on what survives near-dup +
+        # quality + language, not on the raw corpus. ``semantic`` is
+        # the cosine threshold. The flags
         # relation is slim (id + bools + one int) and its survivor
         # set feeds the iterative quantizer (one action per Lloyd
         # round), so it is pinned; with semantic=None this branch is

@@ -323,15 +323,15 @@ def test_corpus_curation_funnel_lsh_refines_exact(spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "hash_bits, bands, radius, max_subset, by",
+    "hash_bits, bands, radius, by",
     [
-        (60, 10, 7, 3, ()),
-        (64, 8, 6, 2, ()),
-        (64, 8, 6, 2, ("grp",)),
+        (60, 10, 7, ()),
+        (64, 8, 6, ()),
+        (64, 8, 6, ("grp",)),
     ],
 )
 def test_hamming_band_pairs_equals_brute_force(
-    spark, hash_bits, bands, radius, max_subset, by
+    spark, hash_bits, bands, radius, by
 ):
     """Pigeonhole banding has recall 1.0 and the popcount verify has
     precision 1.0, so the result is exactly the all-pairs set within
@@ -363,7 +363,7 @@ def test_hamming_band_pairs_equals_brute_force(
     got = {
         (r.a, r.b, r.hamming)
         for r in hamming_band_pairs(
-            fp, "id", "h", hash_bits, bands, radius, max_subset, by=by
+            fp, "id", "h", hash_bits, bands, radius, by=by
         ).collect()
     }
     want = set()
