@@ -326,13 +326,11 @@ def hamming_band_pairs(
     candidate pairs grow O(n²/2^bits): measured ~195 M join rows at
     50 000 docs (19× the sf0.1 wall for 10× the data). Joining on
     s = min(m, 3) band-value tuples (C(10,3)=120 keys/doc at s=3,
-    the scheme of Manku et al., WWW'07 §3) widens
-    the key to s·bits + combo id: expected bucket size drops below 1
-    row, the join output collapses to ~the true pair set, and the
-    explode cost is a linear row factor on the (tiny) fingerprint
-    relation. Larger s only multiplies C(bands, s). The verify stays
-    a broadcast-free codegen popcount; ``distinct`` dedups pairs that
-    share several intact subsets.
+    the scheme of Manku et al., WWW'07 §3) widens the key to s·bits
+    + combo id: expected bucket size drops below 1 row, the join
+    output collapses to ~the true pair set, and the explode cost is a
+    linear row factor on the (tiny) fingerprint relation. The verify stays a broadcast-free codegen popcount;
+    ``distinct`` dedups pairs that share several intact subsets.
     """
     bits = hash_bits // bands
     m = bands - hamming_max
