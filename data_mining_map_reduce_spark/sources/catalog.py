@@ -1,11 +1,11 @@
-"""Schema-pinned table catalog over the driver's parquet testdata.
+"""Table catalog over the driver's parquet testdata.
 
 The reference parses untyped text per record (JSON-lines with
 ``json.loads``, header-skipped CSV splits — reference
 Assignment1/task1.py:17-19, Assignment2/task1.py:21-26). The engine
-replaces that with explicit StructType schemas so Catalyst can prune
-columns and push filters into the parquet scan; schema inference is
-never relied on for correctness.
+reads typed parquet instead, so Catalyst can prune columns and push
+filters into the scan; how its schema is obtained is documented on
+``readers.read_parquet``.
 """
 
 from __future__ import annotations
@@ -13,10 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-# Schemas of the TPC-H-ish testdata (TESTDATA.md). Batch reads take
-# their types from the parquet files; this map is the table-name check
-# in load_table and the schema a file stream over a table is read with
-# (streaming sources cannot infer one).
+from .readers import read_parquet
+
+# Schemas of the TPC-H-ish testdata (TESTDATA.md); what they are used
+# for is set out in readers.read_parquet.
 TABLES: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -130,10 +130,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             # integer division — float division loses microsecond
             # precision above 2^53 nanoseconds (~1970+104 days)
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

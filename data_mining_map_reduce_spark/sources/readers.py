@@ -10,6 +10,9 @@ pushdown-capable.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -40,8 +43,42 @@ def read_csv(
     return reader.csv(path)
 
 
+# (path, st_mtime_ns, st_size) -> the schema Spark inferred for it
+_PARQUET_SCHEMAS: dict[tuple[str, int, int], T.StructType] = {}
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Parquet scan whose schema is inferred once per file per process.
+
+    A bare ``spark.read.parquet`` runs a schema-inference job (footer
+    reads) on every call. Here the first read of a file infers its
+    schema; later reads of the unchanged file (same path, mtime and
+    size) pass that schema to the reader and run no job. Types still
+    come from the file, so a file rewritten with other columns or types
+    is inferred again. The schema is the one inferred under the session
+    conf of the first read; ``load_table`` sets ``nanosAsLong`` before
+    every ``events`` read. Only a local regular file is memoized: a
+    directory's mtime and size miss rewrites of the part files inside
+    it, and a path ``os.stat`` cannot see (``hdfs://``, ``s3a://``) is
+    inferred on every read.
+
+    ``catalog.TABLES`` is not the batch schema: it is the table-name
+    check in ``load_table`` and the schema a file stream over a table
+    is read with (streaming sources cannot infer one).
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _PARQUET_SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _PARQUET_SCHEMAS[key] = df.schema
+    return df
 
 
 def read_chunked_dir(

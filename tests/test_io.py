@@ -224,3 +224,89 @@ def test_gzipped_jsonl_reads_transparently(spark, sf_dir, tmp_path):
     back = read_json_lines_gz(spark, str(shard_dir), RESULT_SCHEMA)
     assert _rows(back) == _rows(df)
     assert back.rdd.getNumPartitions() == 2  # one task per .gz shard
+
+
+def _jobs_run_by(spark, group, fn):
+    """Call ``fn()`` under its own job group; return its result and the
+    number of Spark jobs the call ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_schema_once(spark, sf_dir, tmp_path):
+    """The first read of a table infers its schema (one Spark job); a
+    second read of the unchanged file reuses it and runs no job, with
+    the same schema and rows."""
+    import shutil
+
+    from data_mining_map_reduce_spark.sources.catalog import load_table
+
+    # a fresh path, so no earlier test has read this file already
+    shutil.copy(f"{sf_dir}/nation.parquet", tmp_path / "nation.parquet")
+    first, first_jobs = _jobs_run_by(
+        spark, f"{tmp_path}:first", lambda: load_table(spark, str(tmp_path), "nation")
+    )
+    second, second_jobs = _jobs_run_by(
+        spark, f"{tmp_path}:second", lambda: load_table(spark, str(tmp_path), "nation")
+    )
+    assert first_jobs >= 1
+    assert second_jobs == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_rewritten_parquet_file_is_inferred_again(spark, tmp_path):
+    """A file rewritten at the same path with another column set reads
+    with its new schema, not the one remembered for the old file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x", "y"], "c": [0.5, 1.5]}), path)
+    back = read_parquet(spark, path)
+    assert back.dtypes == [("b", "string"), ("c", "double")]
+    assert sorted(map(tuple, back.collect())) == [("x", 0.5), ("y", 1.5)]
+
+
+def test_events_nanos_ts_loads_as_micros_timestamp(spark, tmp_path):
+    """``events.ts`` stored as parquet TIMESTAMP(NANOS) loads as a
+    timestamp truncated to microseconds, on the first read and on the
+    read that reuses the remembered schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_mining_map_reduce_spark.sources.catalog import load_table
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999, 1_000]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+        version="2.6",
+        coerce_timestamps=None,
+    )
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type.unit == "ns"
+    for read in ("first", "memoized"):
+        df, jobs = _jobs_run_by(
+            spark, f"{tmp_path}:{read}", lambda: load_table(spark, str(tmp_path), "events")
+        )
+        if read == "first":
+            assert jobs >= 1
+        else:
+            assert jobs == 0
+        assert dict(df.dtypes)["ts"] == "timestamp", read
+        got = df.select("event_id", F.unix_micros("ts").alias("us")).collect()
+        assert sorted(map(tuple, got)) == [(i + 1, n // 1000) for i, n in enumerate(nanos)]
