@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, dot
+from ..guards import require
 
 
 def _as_double_vec(col: str) -> Column:
@@ -47,7 +48,7 @@ def ivf_train_sample(
     hash-smallest L2-normalized vectors by id (TakeOrderedAndProject —
     a seeded uniform pseudo-random subset, layout-independent and
     content-deterministic), sorted so the driver-side Lloyd sees a
-    canonical row order. Shared helper (r18): ``ivf_topk`` and
+    canonical row order. Shared helper: ``ivf_topk`` and
     ``ivfpq_topk`` compute the IDENTICAL sample — an A/B caller that
     runs both (ann_recall_check) passes one sample to both via their
     ``train=`` parameter instead of paying the collect job (and the
@@ -95,19 +96,18 @@ def cosine_topk(
 
     Cost is |probes| × |corpus| — exact brute force is the ground
     truth for FEW probes, not a batch self-join. ``max_probes`` fails
-    fast instead of silently degenerating; large probe sets belong on
-    ``hyperplane_lsh_topk`` (or semantic_near_dup_pairs for
-    all-pairs shapes).
+    fast instead of silently degenerating (``None`` or 0 disables it);
+    large probe sets belong on ``hyperplane_lsh_topk`` (or
+    semantic_near_dup_pairs for all-pairs shapes).
     """
-    if max_probes is not None:
-        n_probes = probes.count()
-        if n_probes > max_probes:
-            raise ValueError(
-                f"cosine_topk got {n_probes} probes (> max_probes="
-                f"{max_probes}); brute-force cost is probes x corpus — "
-                "use hyperplane_lsh_topk for large probe sets, or raise "
-                "max_probes explicitly"
-            )
+    require(
+        "cosine_topk probes (counted up to max_probes + 1)",
+        max_probes,
+        lambda: probes.limit(max_probes + 1).count(),
+        "max_probes",
+        "brute-force cost is probes x corpus — use hyperplane_lsh_topk "
+        "for large probe sets, or raise max_probes explicitly",
+    )
     cands = emb.select(
         F.col(id_col).alias("neighbor_id"), _as_double_vec(vec_col).alias("_cv")
     )
@@ -246,7 +246,7 @@ def _lloyd_np(
     by contract — see ivf_topk). Deterministic given (points, seed);
     empty clusters keep their previous centroid. ``what`` names which
     knob k came from, so a too-small training sample reports the right
-    one (n_list vs PQ k_codes — ADVICE r7)."""
+    one (n_list vs PQ k_codes)."""
     rng = np.random.default_rng(seed)
     if len(points) < k:
         raise ValueError(
@@ -283,7 +283,7 @@ def _index_encode_pandas(
 
     Why: the declarative argmin (transform → aggregate) evaluates
     outside whole-stage codegen at ~50 µs/row (the same cliff fixed
-    for the Lloyd loop, SCALE.md r13); at the 100× corpus the IVF /
+    for the Lloyd loop, SCALE.md "Second decade"); at the 100× corpus the IVF /
     IVF-PQ index build measured 294/374 s with the encode pass
     dominating. Semantics are unchanged: squared-L2 argmin over
     already-normalized vectors, ties → lowest index (numpy
@@ -389,8 +389,9 @@ def ivf_topk(
         train = ivf_train_sample(emb, id_col, vec_col, train_cap)
     centroids = _lloyd_np(train, n_list, seed, kmeans_max_iter)
 
-    # Index build stays on the declarative assign_clusters: the r13
-    # vectorized-encode A/B (SCALE.md) measured plain IVF SLOWER with
+    # Index build stays on the declarative assign_clusters: the
+    # vectorized-encode A/B (SCALE.md "IVF-PQ encode vectorized; plain
+    # IVF measured and left alone") measured plain IVF SLOWER with
     # the Arrow pass at both sf1 (37.2→41.0 s) and sf10
     # (294.2→353.6 s) — one coarse argmin per row is cheap enough
     # that the Arrow round-trip + lost codegen boundary outweighs it;
@@ -439,7 +440,7 @@ def ivf_topk(
     w = Window.partitionBy("probe_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
-    # Broadcast the probe side (r18, guide §3.1): it is |probes| ×
+    # Broadcast the probe side (guide §3.1): it is |probes| ×
     # n_probe rows by construction (this operator's contract is FEW
     # probes — cosine_topk's max_probes envelope), while the unhinted
     # plan sort-merge-joined, shuffling the ENTIRE indexed corpus by
@@ -526,7 +527,7 @@ def semantic_near_dup_pairs(
     cluster only → (a, b, cos_sim, cluster).
 
     The scale design point: the all-pairs join is never expressed as
-    a Spark join at all. The r14 minhash receipt measured the failure
+    a Spark join at all. The minhash sf10 receipt measured the failure
     mode of a vector-carrying candidate shuffle (220 GB of array
     payload at sf10 = the wall); here the quadratic lives INSIDE one
     ``applyInPandas`` task per cluster — one repartition of the
@@ -552,7 +553,7 @@ def semantic_near_dup_pairs(
     threshold, restricted to co-probed pairs — recall is governed by
     the quantizer, precision 1.0 by construction (the verify is an
     exact cosine; pytest-asserted both ways). Cross-engine rounding
-    seam (r15 ADVICE): the refinement contract compares the numpy
+    seam: the refinement contract compares the numpy
     gram's 6-dp cosine against Spark's codegen cosine — a value
     landing exactly on a 5e-7 rounding boundary could round apart in
     the 6th decimal across the two engines and flip threshold
@@ -564,13 +565,13 @@ def semantic_near_dup_pairs(
     """
     from .clustering import kmeans
 
-    # Slim (id, vec) pin (r17): this relation feeds the k-sizing
+    # Slim (id, vec) pin: this relation feeds the k-sizing
     # count, the quantizer's own persist, and the multi-probe
     # assignment — for callers whose emb lineage is non-trivial (the
     # curation funnel's survivor join) each action re-executed the
     # whole upstream. The count below doubles as the materializing
     # action; both columns are read by every consumer, so the RDD
-    # pin loses no pruning (the r12 slim-vs-fat rule).
+    # pin loses no pruning (the slim-vs-fat rule).
     pts = emb.select(
         F.col(id_col).alias("_id"), _as_double_vec(vec_col).alias("_v")
     ).localCheckpoint(eager=False)
@@ -578,24 +579,24 @@ def semantic_near_dup_pairs(
         n = pts.count()
         k = max(8, -(-n // target_cluster_size))
     _, centroids = kmeans(pts, "_v", k=k, seed=seed)
-    # Lazy pin (r15 ADVICE): the multi-probe mapInPandas feeds BOTH
-    # the hot-cluster pre-flight and the pair stage — un-pinned it
-    # executed twice; the pre-flight count below doubles as the
-    # checkpoint's materializing action, so the pair stage reads the
-    # blocks. (Fat rows, but the pair stage reads every column; only
-    # the count loses pruning — cheaper than a second mapInPandas.)
+    # Lazy pin: the multi-probe mapInPandas feeds BOTH the hot-cluster
+    # pre-flight and the pair stage — un-pinned it executed twice; the
+    # pre-flight aggregate below doubles as the checkpoint's
+    # materializing action, so the pair stage reads the blocks. (Fat
+    # rows, but the pair stage reads every column; only the pre-flight
+    # loses pruning — cheaper than a second mapInPandas.)
     assigned = _assign_probe_clusters(pts, "_v", centroids, n_probe).localCheckpoint(
         eager=False
     )
     sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("_n"))
-    hot = sizes.where(F.col("_n") > max_cluster_rows).limit(1).collect()
-    if hot:
-        raise ValueError(
-            f"semantic_near_dup_pairs: cluster {hot[0]['cluster']} has "
-            f"{hot[0]['_n']} rows > max_cluster_rows={max_cluster_rows} — "
-            "the quantizer is skewed; raise k / target_cluster_size, or "
-            "raise max_cluster_rows if the per-task quadratic is affordable"
-        )
+    require(
+        "semantic_near_dup_pairs largest cluster rows",
+        max_cluster_rows,
+        lambda: sizes.agg(F.max("_n")).collect()[0][0],
+        "max_cluster_rows",
+        "the quantizer is skewed; raise k / target_cluster_size, or "
+        "raise max_cluster_rows if the per-task quadratic is affordable",
+    )
 
     thr = float(threshold)
 
@@ -787,7 +788,7 @@ def ivfpq_topk(
     )
 
     # encode: coarse list + m_sub per-subspace argmin codes (0-based),
-    # numpy per Arrow batch (r13) — see _index_encode_pandas; one
+    # numpy per Arrow batch — see _index_encode_pandas; one
     # interpreted subspace-argmin expression per row per subspace was
     # the dominant cost of the 100x index build
     cands = _index_encode_pandas(base, id_col, coarse, codebooks)

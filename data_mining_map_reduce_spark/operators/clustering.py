@@ -474,6 +474,13 @@ class BFRState:
         )
 
     @staticmethod
+    def _summary(r):
+        """(n, SUM, SUMSQ) of one ``sufficient_stats`` row."""
+        n = r.n
+        sq = [(sd * sd + m * m) * n for sd, m in zip(r.std, r.mean)]
+        return (n, [m * n for m in r.mean], sq)
+
+    @staticmethod
     def _mean_std(summ):
         n, s, sq = summ
         mean = [x / n for x in s]
@@ -506,12 +513,7 @@ def bfr(
         init_sample = chunks[0]
     assigned, _ = kmeans(init_sample, vec_col, k=k, seed=seed)
     stats = sufficient_stats(assigned, vec_col).collect()
-    for r in stats:
-        n = r.n
-        mean, std = list(r.mean), list(r.std)
-        s = [m * n for m in mean]
-        sq = [(sd * sd + m * m) * n for sd, m in zip(std, mean)]
-        state.ds[r.cluster] = (n, s, sq)
+    state.ds = {r.cluster: BFRState._summary(r) for r in stats}
 
     for round_id, chunk in enumerate(chunks):
         # distance to each DS centroid in mahalanobis units (codegen)
@@ -571,10 +573,9 @@ def bfr(
         assignments.append(ds_assign)
 
         # merge chunk stats into DS summaries; leftovers ride the same
-        # aggregation as the -1 group (r17: their row count was a
-        # separate filter+count job per round — one grouped scan of
-        # the cached chunk returns DS stats AND n_leftover together,
-        # identical per-group sums)
+        # aggregation as the -1 group, so one grouped scan of the cached
+        # chunk returns DS stats AND n_leftover together (no separate
+        # filter+count job per round)
         all_stats = sufficient_stats(
             with_dist.withColumn(
                 "cluster",
@@ -586,19 +587,18 @@ def bfr(
             vec_col,
         ).collect()
         n_left = next((int(r.n) for r in all_stats if r.cluster == -1), 0)
-        chunk_stats = [r for r in all_stats if r.cluster != -1]
-        for r in chunk_stats:
-            n = r.n
-            mean, std = list(r.mean), list(r.std)
-            s = [m * n for m in mean]
-            sq = [(sd * sd + m * m) * n for sd, m in zip(std, mean)]
-            if round_id == 0:
-                # first chunk seeded DS from its own sample; replace
-                state.ds[r.cluster] = (n, s, sq)
-            else:
-                state.ds[r.cluster] = BFRState._merge(state.ds[r.cluster], (n, s, sq))
+        if round_id == 0:
+            # chunk 0 re-counts the init sample's points, so its stats
+            # replace the sample's; a sample cluster no chunk-0 point
+            # confirms is dropped rather than counted twice
+            state.ds = {}
+        for r in all_stats:
+            if r.cluster != -1:
+                summ = BFRState._summary(r)
+                prev = state.ds.get(r.cluster)
+                state.ds[r.cluster] = BFRState._merge(prev, summ) if prev else summ
 
-        # NULL-consistent with the -1 group above (r18, ADVICE r17):
+        # NULL-consistent with the -1 group above:
         # the when/otherwise routes NULL-condition rows (null/ragged
         # vectors make the _md element null) into the -1 count, while
         # a bare ~(md < threshold) would DROP them (NULL negates to

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..guards import local_rows
+
 
 def canonical_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Undirected edge list, one row per edge, src < dst, deduped."""
@@ -47,10 +49,10 @@ def canonical_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
 def symmetric_edges(edges: DataFrame) -> DataFrame:
     """Both directions of each undirected edge (for message passing).
 
-    Explode, not union (r17 optimization): the union form referenced
-    ``edges`` twice, and Catalyst plans — and EXECUTES — the whole
-    upstream once per branch (no ReusedExchange fires across the
-    alias-swapped branches; plan-verified in plans/r17). For graph
+    Explode, not union: the union form referenced ``edges`` twice,
+    and Catalyst plans — and EXECUTES — the whole upstream once per
+    branch (no ReusedExchange fires across the alias-swapped
+    branches; plan-verified in plans/r17). For graph
     queries whose edge relation is the co-occurrence pair join, that
     was 2x the dominant stage. Same row multiset, one upstream pass.
     """
@@ -143,9 +145,8 @@ def connected_components(
     overhead, not data volume, dominates CC cost on small graphs
     (the Girvan-Newman inner loop and the dedup pipelines' near-empty
     edge sets re-solve CC on graphs of a few hundred vertices). The
-    collect is bounded by the cap; graphs above it — the 100 TB
-    shape — always take the distributed loop. Set ``local_cap=0`` to
-    force the distributed path.
+    probe is ``guards.local_rows``; ``local_cap=0`` forces the
+    distributed loop.
     """
     # Materialize the (possibly very expensive) upstream edge
     # computation exactly ONCE: vertices are derived from the
@@ -155,13 +156,9 @@ def connected_components(
     # Jaccard self-join, which once dominated this loop's wall time).
     sym = symmetric_edges(edges).localCheckpoint(eager=True)
     id_type = dict(sym.dtypes)["src"]
-    if local_cap > 0:
-        # limit(cap+1) bounds the probe itself: on a huge graph this
-        # reads one partition's first rows, never the full edge list,
-        # and doubles as the collect when the graph fits the cap.
-        rows = sym.limit(local_cap + 1).collect()
-        if len(rows) <= local_cap:
-            return _local_min_label_components(rows, id_type, edges.sparkSession)
+    rows = local_rows(sym, local_cap)
+    if rows is not None:
+        return _local_min_label_components(rows, id_type, edges.sparkSession)
     # Lazy checkpoints throughout the loop: the convergence-probe agg
     # is the ONLY action per round, and materializing the checkpoint
     # inside that job halves the per-round job count (round overhead,
@@ -260,8 +257,8 @@ def label_propagation(
     count on the driver — identical votes and tie-breaks (parity
     pytest-asserted AND externally checked by the SQL-unrolled
     driver oracle), ~1 job instead of a join+window shuffle per
-    round. Above the cap the distributed rounds below run unchanged;
-    ``local_cap=0`` forces them."""
+    round. The probe is ``guards.local_rows``; ``local_cap=0`` forces
+    the distributed rounds."""
     # Materialize the (expensive) edge lineage exactly once and derive
     # the vertex set from it — deriving vertices from `edges` directly
     # would re-execute the upstream co-occurrence join a second time
@@ -271,13 +268,10 @@ def label_propagation(
     # that consuming job halves the loop's job count without
     # recomputation.
     sym = symmetric_edges(edges).localCheckpoint(eager=True)
-    if local_cap > 0:
-        rows = sym.limit(local_cap + 1).collect()
-        if len(rows) <= local_cap:
-            id_type = dict(sym.dtypes)["src"]
-            return _local_label_propagation(
-                rows, max_iter, id_type, edges.sparkSession
-            )
+    rows = local_rows(sym, local_cap)
+    if rows is not None:
+        id_type = dict(sym.dtypes)["src"]
+        return _local_label_propagation(rows, max_iter, id_type, edges.sparkSession)
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -370,9 +364,9 @@ def edge_betweenness(
     beyond it, ``n_roots`` runs BFS from a FIXED-SIZE seeded vertex
     sample and rescales credits by V/k (Brandes-style approximation)
     — same code path, O(k·E) total work, so cost grows with the EDGE
-    count only, not quadratic-family (the r12 sf10 receipt measured
-    the fractional knob at 9.2x/decade because |roots| grew with V;
-    a fixed k makes the sampled tier genuinely sublinear in V).
+    count only, not quadratic-family (SCALE.md "Fixed-root sampled
+    betweenness": the old fractional knob grew 9.2x/decade at sf10
+    because |roots| grew with V).
     Credits sum distributed and halve (each shortest path is seen
     from both endpoint roots).
 
@@ -388,9 +382,9 @@ def edge_betweenness(
     explode + Arrow round-trip, which is pure overhead on a
     course-scale graph. The adjacency already must fit one task by
     this operator's documented envelope, so the cap only tightens
-    that bound (500 vertices keeps the Python sweep sub-second);
-    larger graphs always take the batched executor-side path. Set
-    ``local_cap=0`` to force it.
+    that bound (500 vertices keeps the Python sweep sub-second). The
+    probe is ``guards.local_rows``; ``local_cap=0`` forces the batched
+    executor-side path.
     """
     spark = edges.sparkSession
     if adjacency is not None:
@@ -405,18 +399,11 @@ def edge_betweenness(
 
     if n_roots is not None and n_roots < 1:
         raise ValueError(f"n_roots must be >= 1, got {n_roots}")
-    # Local fast-path probe FIRST (r18): limit(cap+1) bounds the probe
-    # itself — on a huge graph this reads one partition's first rows,
-    # never the full adjacency — and when the graph fits, the
-    # collected head doubles as (a) the vertex count the sampling
-    # logic needs (the old roots.count() job re-read the checkpoint
-    # for a number the driver already held) and (b) the unsampled
-    # root set (the old roots.collect() job, same partition order).
-    head = None
-    if local_cap > 0:
-        head = adj_df.limit(local_cap + 1).collect()
-        if len(head) > local_cap:
-            head = None
+    # Local fast-path probe FIRST: when the graph fits, the collected
+    # head doubles as the vertex count the sampling logic needs and as
+    # the unsampled root set (same partition order), so neither costs
+    # a job of its own.
+    head = local_rows(adj_df, local_cap)
 
     # Symmetrized adjacency contains every non-isolated vertex as a
     # key, so its id set IS the vertex set — no second edge scan.
@@ -676,9 +663,9 @@ def girvan_newman(
     way; at course scale every distributed round is pure job overhead
     (a 19-edge graph paid ~4 s/removal in Spark jobs). Graphs above
     the cap run the distributed rounds below, whose per-round
-    betweenness is the batched executor-side Brandes sweep. The
-    collect is bounded by the cap; set ``local_cap=0`` to force the
-    distributed path.
+    betweenness is the batched executor-side Brandes sweep. The probe
+    is ``guards.local_rows``; ``local_cap=0`` forces the distributed
+    path.
 
     Loop-invariant reuse (the graph changes by exactly one edge per
     round, so nothing invariant is recomputed):
@@ -702,17 +689,16 @@ def girvan_newman(
     """
     rebase_every = 10
     current = canonical_edges(edges).localCheckpoint(eager=True)
-    if local_cap > 0:
-        rows = current.limit(local_cap + 1).collect()
-        if len(rows) <= local_cap:
-            id_type = dict(current.dtypes)["src"]
-            return _local_girvan_newman(
-                [(r[0], r[1]) for r in rows],
-                max_removals,
-                q_drop_stop,
-                edges.sparkSession,
-                id_type,
-            )
+    rows = local_rows(current, local_cap)
+    if rows is not None:
+        id_type = dict(current.dtypes)["src"]
+        return _local_girvan_newman(
+            [(r[0], r[1]) for r in rows],
+            max_removals,
+            q_drop_stop,
+            edges.sparkSession,
+            id_type,
+        )
     original = current
     n_edges = current.count()
     deg = degrees(original).localCheckpoint(eager=True)

@@ -17,7 +17,7 @@ Engine mapping:
 - FPGrowth (`pyspark.ml.fpm`) is the built-in capability twin used as
   a cross-check in tests.
 
-Scale design (the round-1 crash and its fix):
+Scale design:
 - The local threshold scales with the partition's actual share of
   baskets: ``ceil(support * part_baskets / total_baskets)``. Counts
   are integers, so any globally-frequent itemset clears this bound in
@@ -25,10 +25,11 @@ Scale design (the round-1 crash and its fix):
   the threshold no longer collapses to 1 when support < partitions.
 - Pair candidates are counted from pairs that *occur in baskets*
   (Σ C(|basket|,2) work), never enumerated from frequent-singleton
-  cross products (O(f²) — the round-1 JVM killer at sf0.1).
-- A candidate circuit breaker fails fast with a clear error instead
-  of OOM-ing the driver when support is set unreasonably low for the
-  data.
+  cross products (O(f²), which kills the JVM at sf0.1).
+- A candidate circuit breaker (``CANDIDATE_CAP``, through
+  ``guards.require``) fails fast with a clear error instead of
+  OOM-ing the driver when support is set unreasonably low for the
+  data (SCALE.md "Finding 1").
 The only driver-resident state is the candidate list. Baskets never
 leave executors.
 """
@@ -44,20 +45,23 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Per-partition frequent-set cap: beyond this, phase 2 (baskets ×
-# candidates subset scan) and the driver collect stop being bounded.
-DEFAULT_CANDIDATE_CAP = 200_000
+from ..guards import local_rows, require
+
+# Frequent-set cap, per partition and for the phase-1 union: beyond
+# this, phase 2 (baskets × candidates subset scan) and the driver
+# collect stop being bounded.
+CANDIDATE_CAP = 200_000
+
+_CAP_REMEDY = "raise `support` for this data size"
 
 
 def _apriori_local(
-    baskets: list[frozenset],
-    threshold: int,
-    max_size: int | None,
-    candidate_cap: int = DEFAULT_CANDIDATE_CAP,
+    baskets: list[frozenset], threshold: int, max_size: int | None, cap: int
 ) -> set[tuple]:
     """In-memory A-Priori (reference Assignment2/task1.py:47-83):
     frequent k-sets seed candidate (k+1)-sets; counts via subset
-    scan. Returns frequent itemsets as sorted tuples.
+    scan. Returns frequent itemsets as sorted tuples; more than
+    ``cap`` of them raises ``guards.GuardError``.
 
     k=2 counts occurring pairs directly (Σ C(|b|,2)) rather than
     generating all pairs of frequent singletons — at low thresholds
@@ -81,12 +85,10 @@ def _apriori_local(
         pair_counts.update(combinations(kept, 2))
     frequent = {p for p, c in pair_counts.items() if c >= threshold}
     result |= frequent
-    if len(result) > candidate_cap:
-        raise RuntimeError(
-            f"A-Priori candidate explosion: {len(result)} frequent sets at "
-            f"local threshold {threshold} exceeds cap {candidate_cap}; "
-            "raise `support` for this data size"
-        )
+    require(
+        f"A-Priori frequent sets up to k=2 at local threshold {threshold}",
+        cap, lambda: len(result), "CANDIDATE_CAP", _CAP_REMEDY,
+    )
 
     k = 2
     while frequent and (max_size is None or k < max_size):
@@ -114,11 +116,10 @@ def _apriori_local(
                     counts[cand] += 1
         frequent = {c for c, n in counts.items() if n >= threshold}
         result |= frequent
-        if len(result) > candidate_cap:
-            raise RuntimeError(
-                f"A-Priori candidate explosion at k={k}: {len(result)} "
-                f"frequent sets exceeds cap {candidate_cap}"
-            )
+        require(
+            f"A-Priori frequent sets up to k={k} at local threshold {threshold}",
+            cap, lambda: len(result), "CANDIDATE_CAP", _CAP_REMEDY,
+        )
     return result
 
 
@@ -128,7 +129,6 @@ def son_frequent_itemsets(
     support: int = 3,
     num_partitions: int = 8,
     max_size: int | None = None,
-    candidate_cap: int = DEFAULT_CANDIDATE_CAP,
 ) -> DataFrame:
     """SON over a (key, items array<string>) DataFrame →
     (itemset csv-string, support long), exact at ``support``.
@@ -140,8 +140,13 @@ def son_frequent_itemsets(
     module docstring), never the degenerate ``support // p`` of the
     reference (Assignment2/task1.py:42) which floors to 0-1 whenever
     support < p.
+
+    Phase 1 fails fast above ``CANDIDATE_CAP`` frequent sets, per
+    partition and in the candidate union the driver collects.
     """
     spark = baskets_df.sparkSession
+    # read on the driver so the phase-1 closure ships the value
+    cap = CANDIDATE_CAP
     parts = (
         baskets_df.select(F.col(items_col).alias("items"))
         .repartition(num_partitions, F.crc32(F.concat_ws(",", F.col(items_col))))
@@ -161,19 +166,21 @@ def son_frequent_itemsets(
         local_threshold = max(
             1, math.ceil(support * len(baskets) / total)
         )
-        found = _apriori_local(baskets, local_threshold, max_size, candidate_cap)
+        found = _apriori_local(baskets, local_threshold, max_size, cap)
         yield pd.DataFrame({"itemset": [",".join(t) for t in found]})
 
-    candidates = [
-        r.itemset for r in parts.mapInPandas(phase1, "itemset string").distinct().collect()
-    ]
-    if len(candidates) > candidate_cap:
-        raise RuntimeError(
-            f"SON phase-1 produced {len(candidates)} candidates "
-            f"(cap {candidate_cap}); raise `support` for this data size"
-        )
+    cand_df = parts.mapInPandas(phase1, "itemset string").distinct()
+    rows = local_rows(cand_df, cap) if cap > 0 else cand_df.collect()
+    # the count job runs only on the failure path
+    require(
+        "SON phase-1 candidates",
+        cap,
+        lambda: len(rows) if rows is not None else cand_df.count(),
+        "CANDIDATE_CAP",
+        _CAP_REMEDY,
+    )
     cand_bc = spark.sparkContext.broadcast(
-        [tuple(c.split(",")) for c in candidates]
+        [tuple(r.itemset.split(",")) for r in rows]
     )
 
     def phase2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -256,7 +263,7 @@ def fpgrowth_frequent_itemsets(
     )
     # item -> dense int code; the same broadcast join that prunes
     # infrequent items attaches the code, so encoding costs no extra
-    # shuffle over the pre-r8 prune
+    # shuffle over the plain prune
     item_dict = dictionary_encode_big(freq_items, "_i", "_code")
     pruned = (
         keyed.join(
@@ -275,9 +282,9 @@ def fpgrowth_frequent_itemsets(
     # to support+1 — the final filter restores exactness.
     # numPartitions stays at the library default (= input
     # partitioning): swept 0/8/32/64 at sf0.1 → 10.8/12.2/14.1/16.1 s
-    # with identical outputs (OPTIMIZATION_r18.md §6, VERDICT.md r18
-    # table) — the extra shuffle of conditional bases costs more than
-    # the parallelism it adds.
+    # with identical outputs (OPTIMIZATION_r18.md §6) — the extra
+    # shuffle of conditional bases costs more than the parallelism it
+    # adds.
     model = FPGrowth(
         itemsCol=items_col,
         minSupport=max(support - 0.5, 0.5) / max(total, 1),

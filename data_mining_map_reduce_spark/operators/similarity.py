@@ -25,26 +25,26 @@ import os
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import FOLD_PRIME, hash_params
+from ..guards import require
 
-# Scale guard for the exact all-pairs twins (r10 verdict task 2): the
-# sf10 probe measured the exact self-join paths exhausting local disk
-# at ~500 k docs (SCALE.md) — the candidate/verify shuffle is
-# superlinear in set count, and on a cluster it grinds shuffle disks
-# the same way. The exact path is a VERIFICATION twin; above this many
-# distinct set keys the banded MinHash-LSH twin is the shipped scale
-# path. Env-overridable like son_itemsets' SPARK_GRAFT_ITEMSET_SUPPORT
-# (0 disables — e.g. for a deliberate ground-truth run on a cluster
-# with the disk to pay for it).
+# Scale guard for the exact all-pairs twins: the exact self-join
+# paths exhaust local disk at ~500 k docs (SCALE.md "Exact all-pairs
+# twins: guarded") — the candidate/verify shuffle is superlinear in
+# set count, and on a cluster it grinds shuffle disks the same way.
+# The exact path is a VERIFICATION twin; above this many distinct set
+# keys the banded MinHash-LSH twin is the shipped scale path.
+# Env-overridable (0 disables — e.g. for a deliberate ground-truth run
+# on a cluster with the disk to pay for it).
 EXACT_PAIRS_DEFAULT_MAX_KEYS = 200_000
 
-# Scale guard for the LSH verify join (r14 verdict task 2): the sf10
-# probe measured the registered reference-banding row (J >= 0.05,
-# b=32/r=1) at 958.6 s — 343 M candidate rows each carrying TWO
-# ~40-element bigint item arrays (~220 GB) through ONE verify shuffle,
-# where spill turns linear candidate growth superlinear; the
-# partition-count fix was tested and REFUTED (1024 partitions died on
-# disk — the WRITE volume is the wall, SCALE.md r14 addendum). The
-# guard estimates that write volume BEFORE the verify join runs:
+# Scale guard for the LSH verify join: the registered reference-banding
+# row (J >= 0.05, b=32/r=1) took 958.6 s at sf10 — 343 M candidate rows
+# each carrying TWO ~40-element bigint item arrays (~220 GB) through
+# ONE verify shuffle, where spill turns linear candidate growth
+# superlinear; raising the partition count does not help (1024
+# partitions died on disk — the WRITE volume is the wall; SCALE.md
+# "The minhash_lsh_pairs verify wall is now guarded"). The guard
+# estimates that write volume BEFORE the verify join runs:
 # candidate mass (sum of B*(B-1)/2 over post-cap bucket sizes — one
 # cheap aggregate over the banded relation, which the hot-bucket cap
 # scans anyway) times the per-candidate array payload (average set
@@ -61,99 +61,85 @@ def _guard_lsh_verify(
     rows_per_band: int, max_bucket: int | None,
     bucket_sizes: DataFrame | None = None,
 ) -> None:
-    budget = int(
-        os.environ.get(
-            "SPARK_GRAFT_LSH_VERIFY_BUDGET",
-            str(LSH_VERIFY_DEFAULT_BUDGET_BYTES),
-        )
-    )
-    if budget <= 0:
-        return
     # Candidate mass = sum over (post-cap) buckets of B*(B-1)/2 — the
     # pre-distinct collision rows, a cheap upper bound on what the
     # verify join shuffles (dedup only shrinks it). With a hot-bucket
     # cap the caller already grouped the banded relation into
-    # ``bucket_sizes`` — filtering THAT to the surviving buckets is
+    # ``bucket_sizes``; filtered to the surviving buckets it is
     # row-for-row the post-cap bucket histogram (the cap join keeps
-    # exactly _bsz rows per surviving bucket), so the mass estimate
-    # reuses it instead of re-grouping the capped banded relation — a
-    # whole keys×bands aggregation dropped from the guard (r18,
-    # VERDICT task 4). Without a cap, one aggregate over banded as
-    # before. This collect runs FIRST on purpose: it materializes the
-    # lazy exploded/sig/bucket_sizes checkpoints, so the second
-    # estimate and the main query read blocks. (A single crossJoined
-    # collect of both estimates was measured WORSE: its two leaf
+    # exactly _bsz rows per surviving bucket), so no second keys×bands
+    # aggregation runs. The mass collect runs FIRST on purpose: it
+    # materializes the lazy exploded/sig/bucket_sizes checkpoints, so
+    # the second estimate and the main query read blocks. (A single
+    # crossJoined collect of both estimates is WORSE: its two leaf
     # stages race on the lazy exploded checkpoint and double-compute
     # it — build wall 3.2 → 6.0 s at sf0.1.)
-    if bucket_sizes is not None and max_bucket is not None:
-        hist = bucket_sizes.where(F.col("_bsz") <= max_bucket)
-    else:
-        hist = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_bsz"))
-    mass_row = (
-        hist.agg(
+    def estimate() -> int:
+        if bucket_sizes is not None and max_bucket is not None:
+            hist = bucket_sizes.where(F.col("_bsz") <= max_bucket)
+        else:
+            hist = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_bsz"))
+        pairs = hist.agg(
             F.coalesce(
                 F.sum(F.col("_bsz") * (F.col("_bsz") - 1) / 2), F.lit(0.0)
-            ).alias("_pairs")
-        )
-        .collect()[0]
+            )
+        ).collect()[0][0]
+        # avg_set over DEDUPED (key, item) pairs: the verify sets are
+        # collect_set aggregates, so the payload is governed by distinct
+        # items per key — the raw occurrence count would inflate the
+        # estimate on duplicate-heavy baskets. xxhash64 folds the pair
+        # for one HLL (collisions are irrelevant at estimate precision).
+        stats = exploded.agg(
+            F.approx_count_distinct(F.xxhash64("_k", "_h60")).alias("_pairs_d"),
+            F.approx_count_distinct("_k").alias("_keys"),
+        ).collect()[0]
+        avg_set = stats["_pairs_d"] / max(stats["_keys"], 1)
+        # Two bigint arrays per candidate row (8 B/element) + ~64 B of
+        # row overhead — the shape the sf10 receipt attributes the wall to.
+        return int(pairs * (16.0 * avg_set + 64.0))
+
+    require(
+        "minhash_lsh_pairs estimated verify-join payload bytes",
+        int(
+            os.environ.get(
+                "SPARK_GRAFT_LSH_VERIFY_BUDGET",
+                str(LSH_VERIFY_DEFAULT_BUDGET_BYTES),
+            )
+        ),
+        estimate,
+        "SPARK_GRAFT_LSH_VERIFY_BUDGET",
+        f"at threshold={threshold}, bands={bands} (r={rows_per_band}), "
+        f"max_bucket={max_bucket} this banding is a near-all-pairs "
+        "contract (958.6 s at sf10; raising the partition count does not "
+        "help — the array WRITE volume is the wall). Bound it with a "
+        "tighter threshold (the X2 dedup regime runs 0.7 at r=2), fewer "
+        "bands (recall trade), a lower max_bucket (half the wall, "
+        "output-identical on this corpus), or verify=False for consumers "
+        "that re-exactify downstream; raise SPARK_GRAFT_LSH_VERIFY_BUDGET "
+        "(bytes, 0 disables) for a deliberate run with the shuffle capacity",
     )
-    # avg_set over DEDUPED (key, item) pairs (r15 ADVICE): the verify
-    # sets are collect_set aggregates, so the payload is governed by
-    # distinct items per key — the raw occurrence count would inflate
-    # the estimate on duplicate-heavy baskets and refuse near-budget
-    # runs that actually fit. xxhash64 folds the pair for one HLL
-    # (collisions are irrelevant at estimate precision). Reads the
-    # exploded checkpoint's blocks (materialized by the collect above).
-    stats = exploded.agg(
-        F.approx_count_distinct(F.xxhash64("_k", "_h60")).alias("_pairs_d"),
-        F.approx_count_distinct("_k").alias("_keys"),
-    ).collect()[0]
-    avg_set = stats["_pairs_d"] / max(stats["_keys"], 1)
-    # Two bigint arrays per candidate row (8 B/element) + ~64 B of row
-    # overhead — the shape the sf10 receipt attributes the wall to.
-    est_bytes = mass_row["_pairs"] * (16.0 * avg_set + 64.0)
-    if est_bytes > budget:
-        raise ValueError(
-            f"minhash_lsh_pairs: estimated verify-join payload "
-            f"~{est_bytes / 2**30:.0f} GiB (~{mass_row['_pairs']:.2e} "
-            f"candidate rows x 2 arrays of ~{avg_set:.0f} bigints) exceeds "
-            f"the {budget / 2**30:.0f} GiB shuffle budget at "
-            f"threshold={threshold}, bands={bands} (r={rows_per_band}), "
-            f"max_bucket={max_bucket}. This banding is a near-all-pairs "
-            "contract at this scale (SCALE.md r14: 958.6 s at sf10, "
-            "partition-count fix refuted — the array WRITE volume is the "
-            "wall). Bound it with a tighter threshold (the X2 dedup regime "
-            "runs 0.7 at r=2), fewer bands (recall trade), a lower "
-            "max_bucket (r10: half the wall, output-identical on this "
-            "corpus), or verify=False for consumers that re-exactify "
-            "downstream; raise SPARK_GRAFT_LSH_VERIFY_BUDGET (bytes, 0 "
-            "disables) for a deliberate run with the shuffle capacity."
-        )
 
 
 def _guard_exact_pairs(df: DataFrame, key: str) -> None:
-    cap = int(
-        os.environ.get(
-            "SPARK_GRAFT_EXACT_PAIRS_MAX", str(EXACT_PAIRS_DEFAULT_MAX_KEYS)
-        )
-    )
-    if cap <= 0:
-        return
     # Single linear scan of the key column (map-side partial HLL, no
     # shuffle of note); ±2% sketch error is irrelevant to a
     # disk-death guard with a 2.5x safety margin under the measured
     # failure point.
-    n = df.select(F.approx_count_distinct(key).alias("n")).collect()[0]["n"]
-    if n > cap:
-        raise ValueError(
-            f"exact_jaccard_pairs: ~{n} distinct '{key}' sets exceeds the "
-            f"exact all-pairs guard ({cap}). This operator is the QUADRATIC "
-            "VERIFICATION twin (the r10 sf10 probe measured it exhausting "
-            "local disk at ~500k docs) — use the banded MinHash-LSH variant "
-            "(minhash_lsh_pairs / the *_lsh query twin) at scale, or raise "
-            "SPARK_GRAFT_EXACT_PAIRS_MAX (0 disables) for a deliberate "
-            "ground-truth run."
-        )
+    require(
+        f"exact_jaccard_pairs distinct '{key}' sets (approx)",
+        int(
+            os.environ.get(
+                "SPARK_GRAFT_EXACT_PAIRS_MAX", str(EXACT_PAIRS_DEFAULT_MAX_KEYS)
+            )
+        ),
+        lambda: df.select(F.approx_count_distinct(key)).collect()[0][0],
+        "SPARK_GRAFT_EXACT_PAIRS_MAX",
+        "this operator is the QUADRATIC VERIFICATION twin (it exhausts "
+        "local disk at ~500k docs at sf10) — use the banded MinHash-LSH "
+        "variant (minhash_lsh_pairs / the *_lsh query twin) at scale, or "
+        "raise SPARK_GRAFT_EXACT_PAIRS_MAX (0 disables) for a deliberate "
+        "ground-truth run",
+    )
 
 
 def exact_jaccard_pairs(
@@ -258,15 +244,15 @@ def exact_jaccard_pairs(
     prefix_len = F.col("_sz") - F.ceil(
         F.round(F.lit(threshold) * F.col("_sz"), 6)
     ) + 1
-    # Slim (4-long-column) pin (r18, VERDICT task 2): the collision
-    # self-join references `prefix` TWICE, and Catalyst plans — and
-    # EXECUTES — the whole prefix build (dfreq aggregate + rarity
-    # Window + sizes join) once per side; the r18 funnel before-plan
-    # shows two Window nodes and duplicated dfreq/sizes aggregates
+    # Slim (4-long-column) pin: the collision self-join references
+    # `prefix` TWICE, and Catalyst plans — and EXECUTES — the whole
+    # prefix build (dfreq aggregate + rarity Window + sizes join) once
+    # per side; the unpinned funnel plan shows two Window nodes and
+    # duplicated dfreq/sizes aggregates
     # (plans/r18/corpus_curation_funnel_before.txt). Both consumers
-    # read every column, so the RDD pin loses no pruning (the r12
-    # slim-vs-fat rule). eager=False: the first action materializes
-    # it; plan-only callers stay job-free.
+    # read every column, so the RDD pin loses no pruning (SCALE.md
+    # "Materialize slim relations, never fat ones"). eager=False: the
+    # first action materializes it; plan-only callers stay job-free.
     prefix = (
         base.join(dfreq, "_i")
         .withColumn("_rn", F.row_number().over(rarity))
@@ -336,7 +322,7 @@ def exact_jaccard_pairs(
         )
         .select(key_a, key_b)
     )
-    # Same r18 pin for the verify sets: referenced by BOTH sides of
+    # Same pin for the verify sets: referenced by BOTH sides of
     # the verify join (each was executing the collect_list aggregate
     # — the ObjectHashAggregate pair in the funnel before-plan). Fat
     # array rows, but both consumers read every column — the exact
@@ -406,7 +392,7 @@ def minhash_lsh_pairs(
     join's collect-set + array_intersect shuffle is pure overhead for
     a pre-filter, and at low thresholds it prunes almost nothing.
 
-    ``min_overlap`` (r14, the graph edge-build pre-cut) switches the
+    ``min_overlap`` (the graph edge-build pre-cut) switches the
     exact verify from a Jaccard threshold to a SHARED-ITEM COUNT:
     surviving candidates are filtered to ``|A ∩ B| >= min_overlap``
     and emitted as (key_a, key_b, ``count_alias``) — ``threshold``
@@ -442,28 +428,29 @@ def minhash_lsh_pairs(
     worth more than a cheap projection, and the fold cost is a small
     slice of the pipeline (the shuffles dominate).
 
-    ``materialize`` (r13, the slim-relation fix for the r12 finding
-    that the basket/signature subtree re-executed ~6×): pin the
+    ``materialize`` (the basket/signature subtree otherwise
+    re-executes ~6×): pin the
     multi-consumer relations with lazy ``localCheckpoint`` — the
     per-item ``(key, h60, fold)`` rows (three longs; feeds both the
     signature and the verify-set aggregates), the signature relation
     (key + num_hashes longs; read by BOTH sides of the bucket
     self-join plus the hot-bucket count), and the verify sets (read
     by both sides of the verify join, which need every column, so no
-    pruning is lost). All three are SLIM by the r12 slim-vs-fat rule
-    (SCALE.md): an RDD checkpoint scan cannot column-prune, which is
-    why the r12 attempt to checkpoint the COMBINED fat
-    signature+verify-set aggregate regressed sf1 2× and was reverted
-    — splitting the aggregate is the fix that rule prescribes.
+    pruning is lost). All three are SLIM (SCALE.md "Materialize slim
+    relations, never fat ones"): an RDD checkpoint scan cannot
+    column-prune, which is why checkpointing the COMBINED fat
+    signature+verify-set aggregate regressed sf1 2× — splitting the
+    aggregate is the fix that rule prescribes.
     ``eager=False`` keeps plan-only callers (explain, plan tests)
     job-free; the blocks materialize on the first action and every
     consumer subtree reads them instead of re-running the upstream
     basket join. Set ``materialize=False`` to keep the pure-lineage
     plan (plan tests assert the aggregate shape through this knob).
 
-    Guarded against the measured sf10 verify-shuffle wall (r15): when
+    Guarded against the measured sf10 verify-shuffle wall: when
     ``verify=True`` a pre-flight estimate of candidate mass x array
-    payload raises ValueError above ``SPARK_GRAFT_LSH_VERIFY_BUDGET``
+    payload raises ``guards.GuardError`` above
+    ``SPARK_GRAFT_LSH_VERIFY_BUDGET``
     (default 64 GiB; 0 disables) — see ``_guard_lsh_verify``. SIDE
     EFFECT: this makes ``verify=True`` CONSTRUCTION eager — the two
     estimate aggregates run as collect() jobs when this function is

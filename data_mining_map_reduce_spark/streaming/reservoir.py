@@ -20,6 +20,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..guards import local_rows, require
+
 
 class ReservoirSampler:
     """Sequential reservoir with the reference's exact update rule.
@@ -51,32 +53,30 @@ class ReservoirSampler:
         availableNow file replay; ordering within the batch must be
         pinned for reproducibility).
 
-        ``batch_cap`` bounds the per-batch ``collect()`` — this
-        sampler IS driver-side sequential state by its documented
-        semantics (reference Assignment6/task3.py's global reservoir),
-        but an unbounded collect of a runaway micro-batch would OOM
-        the driver before the operator's semantics ever mattered, so
-        oversized batches fail fast with the scale prescription
-        (graph.py ``local_cap`` precedent: convert 'documented
-        driver-side' into 'refuses to be misused'). Set
-        ``batch_cap=0`` to disable. The executor-side keyed reservoir
-        (streaming/stateful.py ``keyed_reservoir``) is the unbounded-
-        scale path."""
+        ``batch_cap`` bounds the per-batch collect
+        (``guards.local_rows``) — this sampler IS driver-side
+        sequential state by its documented semantics (reference
+        Assignment6/task3.py's global reservoir), but an unbounded
+        collect of a runaway micro-batch would OOM the driver before
+        the operator's semantics ever mattered, so an oversized batch
+        fails fast, before anything is fed, with the scale
+        prescription. ``batch_cap=0`` collects unbounded. The
+        executor-side keyed reservoir (streaming/stateful.py
+        ``keyed_reservoir``) is the unbounded-scale path."""
 
         def _fn(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_cap > 0:
-                rows = batch_df.orderBy(order_col).limit(batch_cap + 1).collect()
-                if len(rows) > batch_cap:
-                    raise RuntimeError(
-                        f"ReservoirSampler.foreach_batch: micro-batch "
-                        f"{batch_id} exceeds batch_cap={batch_cap} rows; "
-                        "shrink the trigger interval / maxFilesPerTrigger, "
-                        "raise batch_cap explicitly, or use the "
-                        "executor-side keyed_reservoir "
-                        "(streaming/stateful.py) — the unbounded-scale path."
-                    )
-            else:
-                rows = batch_df.orderBy(order_col).collect()
+            ordered = batch_df.orderBy(order_col)
+            rows = local_rows(ordered, batch_cap) if batch_cap > 0 else ordered.collect()
+            # the count job runs only on the failure path
+            require(
+                f"ReservoirSampler.foreach_batch micro-batch {batch_id} rows",
+                batch_cap,
+                lambda: len(rows) if rows is not None else batch_df.count(),
+                "batch_cap",
+                "shrink the trigger interval / maxFilesPerTrigger, raise "
+                "batch_cap explicitly, or use the executor-side keyed_reservoir "
+                "(streaming/stateful.py) — the unbounded-scale path",
+            )
             self.feed(rows)
 
         return _fn

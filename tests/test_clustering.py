@@ -304,3 +304,35 @@ def test_kmeanspp_init_properties():
     degen = [[0.0, 0.0]] * 50 + [[1.0, 1.0]]
     got = kmeanspp_init(degen, 3, seed=7)
     assert len(got) == 3
+
+
+def test_bfr_round0_drops_unconfirmed_init_cluster(spark, monkeypatch):
+    """Round 0 counts each chunk-0 point once. The init sample seeds a
+    cluster at (100, 100) that no chunk-0 point can reach; its sample
+    points must not stay in the DS count next to chunk 0's own."""
+    import data_mining_map_reduce_spark.operators.clustering as clustering
+
+    rng = np.random.default_rng(5)
+    pts = [
+        (i, [float(c + dx), float(c + dy)])
+        for i, (c, (dx, dy)) in enumerate(
+            zip([0.0] * 20 + [10.0] * 20, rng.normal(scale=0.3, size=(40, 2)))
+        )
+    ]
+    chunk = spark.createDataFrame(pts, "id long, vec array<double>")
+    far = [(1000 + i, [100.0 + 0.1 * i, 100.0 - 0.1 * i], 2) for i in range(7)]
+    real_kmeans = clustering.kmeans
+    calls = []
+
+    def seeded_kmeans(df, vec_col, k, seed, **kw):
+        if calls:
+            return real_kmeans(df, vec_col, k=k, seed=seed, **kw)
+        calls.append(k)
+        blobs = [(i, v, 0 if v[0] < 5 else 1) for i, v in pts] + far
+        return spark.createDataFrame(blobs, "id long, vec array<double>, cluster int"), None
+
+    monkeypatch.setattr(clustering, "kmeans", seeded_kmeans)
+    _, state = bfr([chunk], "vec", "id", k=3, seed=7)
+    (r0,) = state.rounds
+    assert r0["n_ds_points"] == 40 - r0["n_leftover"], state.rounds
+    assert r0["n_clusters"] == 2, state.rounds
