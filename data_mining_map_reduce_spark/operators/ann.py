@@ -96,9 +96,10 @@ def cosine_topk(
 
     Cost is |probes| × |corpus| — exact brute force is the ground
     truth for FEW probes, not a batch self-join. ``max_probes`` fails
-    fast instead of silently degenerating (``None`` or 0 disables it);
-    large probe sets belong on ``hyperplane_lsh_topk`` (or
-    semantic_near_dup_pairs for all-pairs shapes).
+    fast instead of silently degenerating (``None`` disables it;
+    otherwise it must be positive); large probe sets belong on
+    ``hyperplane_lsh_topk`` (or semantic_near_dup_pairs for all-pairs
+    shapes).
     """
     require(
         "cosine_topk probes (counted up to max_probes + 1)",
@@ -537,7 +538,8 @@ def semantic_near_dup_pairs(
     n / ``target_cluster_size`` so cluster population — and with it
     the per-task quadratic — stays bounded as the corpus grows; a
     pre-flight count raises above ``max_cluster_rows`` (skewed
-    quantizer) instead of letting one straggler task own the job.
+    quantizer; must be positive) instead of letting one straggler task
+    own the job.
 
     ``n_probe``: each vector joins its n_probe nearest clusters'
     searches (multi-probe). Single assignment misses exactly the

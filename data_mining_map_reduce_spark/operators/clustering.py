@@ -632,15 +632,17 @@ def bfr(
                 )
                 # CS clusters fold into nearest DS centroid at the end;
                 # here simplified: assign to nearest DS now (exact
-                # final-merge semantics live in tests vs NMI)
+                # final-merge semantics live in tests vs NMI). Only
+                # surviving DS clusters: round 0 may have dropped one.
+                cs = [(c, m) for (c, m, _) in params if c in state.ds]
                 near = assign_clusters(
-                    kept.select(id_col, vec_col), vec_col,
-                    [m for (_, m, _) in params],
+                    kept.select(id_col, vec_col), vec_col, [m for (_, m) in cs]
                 )
+                cs_ids = F.array(*[F.lit(c) for (c, _) in cs])
                 assignments.append(
                     near.select(
                         F.col(id_col).alias("id"),
-                        F.element_at(mapping, F.col("cluster") + 1).alias("cluster"),
+                        F.element_at(cs_ids, F.col("cluster") + 1).alias("cluster"),
                     ).localCheckpoint(eager=True)
                 )
             else:

@@ -49,7 +49,8 @@ from ..guards import local_rows, require
 
 # Frequent-set cap, per partition and for the phase-1 union: beyond
 # this, phase 2 (baskets × candidates subset scan) and the driver
-# collect stop being bounded.
+# collect stop being bounded. Must be positive: a cap <= 0 turns the
+# per-partition guard off.
 CANDIDATE_CAP = 200_000
 
 _CAP_REMEDY = "raise `support` for this data size"
@@ -170,15 +171,12 @@ def son_frequent_itemsets(
         yield pd.DataFrame({"itemset": [",".join(t) for t in found]})
 
     cand_df = parts.mapInPandas(phase1, "itemset string").distinct()
-    rows = local_rows(cand_df, cap) if cap > 0 else cand_df.collect()
-    # the count job runs only on the failure path
-    require(
-        "SON phase-1 candidates",
-        cap,
-        lambda: len(rows) if rows is not None else cand_df.count(),
-        "CANDIDATE_CAP",
-        _CAP_REMEDY,
-    )
+    rows = local_rows(cand_df, cap)
+    if rows is None:
+        require(
+            "SON phase-1 candidates (counted up to CANDIDATE_CAP + 1)",
+            cap, lambda: cap + 1, "CANDIDATE_CAP", _CAP_REMEDY,
+        )
     cand_bc = spark.sparkContext.broadcast(
         [tuple(r.itemset.split(",")) for r in rows]
     )

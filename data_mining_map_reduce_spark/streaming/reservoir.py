@@ -67,16 +67,15 @@ class ReservoirSampler:
         def _fn(batch_df: DataFrame, batch_id: int) -> None:
             ordered = batch_df.orderBy(order_col)
             rows = local_rows(ordered, batch_cap) if batch_cap > 0 else ordered.collect()
-            # the count job runs only on the failure path
-            require(
-                f"ReservoirSampler.foreach_batch micro-batch {batch_id} rows",
-                batch_cap,
-                lambda: len(rows) if rows is not None else batch_df.count(),
-                "batch_cap",
-                "shrink the trigger interval / maxFilesPerTrigger, raise "
-                "batch_cap explicitly, or use the executor-side keyed_reservoir "
-                "(streaming/stateful.py) — the unbounded-scale path",
-            )
+            if rows is None:
+                require(
+                    f"ReservoirSampler.foreach_batch micro-batch {batch_id} rows "
+                    "(counted up to batch_cap + 1)",
+                    batch_cap, lambda: batch_cap + 1, "batch_cap",
+                    "shrink the trigger interval / maxFilesPerTrigger, raise "
+                    "batch_cap explicitly, or use the executor-side keyed_reservoir "
+                    "(streaming/stateful.py) — the unbounded-scale path",
+                )
             self.feed(rows)
 
         return _fn

@@ -306,10 +306,13 @@ def test_kmeanspp_init_properties():
     assert len(got) == 3
 
 
-def test_bfr_round0_drops_unconfirmed_init_cluster(spark, monkeypatch):
+@pytest.mark.parametrize("n_strays", [0, 8], ids=["ds_only", "with_cs"])
+def test_bfr_round0_drops_unconfirmed_init_cluster(spark, monkeypatch, n_strays):
     """Round 0 counts each chunk-0 point once. The init sample seeds a
     cluster at (100, 100) that no chunk-0 point can reach; its sample
-    points must not stay in the DS count next to chunk 0's own."""
+    points must not stay in the DS count next to chunk 0's own. Strays
+    at (60, 60) are leftovers nearest that dropped centroid: when they
+    form a CS (n_left >= 2k) they fold into a surviving DS cluster."""
     import data_mining_map_reduce_spark.operators.clustering as clustering
 
     rng = np.random.default_rng(5)
@@ -319,7 +322,8 @@ def test_bfr_round0_drops_unconfirmed_init_cluster(spark, monkeypatch):
             zip([0.0] * 20 + [10.0] * 20, rng.normal(scale=0.3, size=(40, 2)))
         )
     ]
-    chunk = spark.createDataFrame(pts, "id long, vec array<double>")
+    strays = [(500 + i, [60.0 + 0.2 * i, 60.0 - 0.1 * i]) for i in range(n_strays)]
+    chunk = spark.createDataFrame(pts + strays, "id long, vec array<double>")
     far = [(1000 + i, [100.0 + 0.1 * i, 100.0 - 0.1 * i], 2) for i in range(7)]
     real_kmeans = clustering.kmeans
     calls = []
@@ -332,7 +336,10 @@ def test_bfr_round0_drops_unconfirmed_init_cluster(spark, monkeypatch):
         return spark.createDataFrame(blobs, "id long, vec array<double>, cluster int"), None
 
     monkeypatch.setattr(clustering, "kmeans", seeded_kmeans)
-    _, state = bfr([chunk], "vec", "id", k=3, seed=7)
+    assign, state = bfr([chunk], "vec", "id", k=3, seed=7)
     (r0,) = state.rounds
-    assert r0["n_ds_points"] == 40 - r0["n_leftover"], state.rounds
+    assert r0["n_ds_points"] == 40 + n_strays - r0["n_leftover"], state.rounds
     assert r0["n_clusters"] == 2, state.rounds
+    assert r0["n_leftover"] >= (6 if n_strays else 0), state.rounds
+    labels = {r.cluster for r in assign.collect()}
+    assert labels <= set(state.ds) | {-1}, (labels, sorted(state.ds))

@@ -1,10 +1,10 @@
 """Scale guards: one bounded probe (``guards.local_rows``) and one budget
 check (``guards.require``).
 
-Every budget site trips on tiny data through its existing knob (env
-variable, keyword or module constant), and its message names the knob
-and the remedy. A source scan keeps the bounded
-``.limit(cap + 1).collect()`` probe inside ``guards.py``.
+The itemset caps trip on tiny data through a monkeypatched
+``CANDIDATE_CAP``, and their messages name the knob and the remedy. A
+source scan keeps the bounded ``.limit(cap + 1).collect()`` probe
+inside ``guards.py``.
 """
 
 from __future__ import annotations
@@ -22,48 +22,6 @@ PKG = ROOT / "data_mining_map_reduce_spark"
 GUARDS = Path(guards.__file__).resolve()
 
 
-def _exact_pairs(spark, monkeypatch):
-    from data_mining_map_reduce_spark.operators.similarity import exact_jaccard_pairs
-
-    monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIRS_MAX", "5")
-    df = spark.createDataFrame(
-        [(k, f"item{i}") for k in range(10) for i in range(k, k + 4)],
-        "k long, it string",
-    )
-    exact_jaccard_pairs(df, "k", "it", threshold=0.5)
-
-
-def _lsh_verify(spark, monkeypatch):
-    from data_mining_map_reduce_spark.operators.similarity import minhash_lsh_pairs
-
-    monkeypatch.setenv("SPARK_GRAFT_LSH_VERIFY_BUDGET", "1")
-    df = spark.createDataFrame(
-        [(k, [f"item{i}" for i in range(k, k + 6)]) for k in range(20)],
-        "k long, items array<string>",
-    )
-    minhash_lsh_pairs(df, "k", "items", threshold=0.05)
-
-
-def _emb(spark, n):
-    return spark.createDataFrame(
-        [(i, [float(i % 4), 1.0]) for i in range(n)],
-        "vec_id long, embedding array<float>",
-    )
-
-
-def _max_probes(spark, monkeypatch):
-    from data_mining_map_reduce_spark.operators.ann import cosine_topk
-
-    emb = _emb(spark, 20)
-    cosine_topk(emb, emb, k=2, max_probes=10)
-
-
-def _max_cluster_rows(spark, monkeypatch):
-    from data_mining_map_reduce_spark.operators.ann import semantic_near_dup_pairs
-
-    semantic_near_dup_pairs(_emb(spark, 40), threshold=0.9, k=2, max_cluster_rows=5)
-
-
 def _son(spark, monkeypatch, cap, baskets, num_partitions):
     from data_mining_map_reduce_spark.operators import itemsets
 
@@ -74,75 +32,38 @@ def _son(spark, monkeypatch, cap, baskets, num_partitions):
     ).collect()
 
 
-def _apriori_pairs(spark, monkeypatch):
+# The itemset caps, which no other test trips. The other budget sites
+# have their own trip tests (test_similarity, test_ann, test_streaming),
+# and every site formats its message through ``require``, whose shape
+# test_require_disabled_never_measures pins.
+# site -> (CANDIDATE_CAP, baskets, partitions, text of the op, raised
+# on a worker)
+ITEMSET_CAPS = {
     # 4 singletons + 6 pairs = 10 frequent sets > 5 after k=2
-    _son(spark, monkeypatch, 5, [["a", "b", "c", "d"]] * 3, 1)
-
-
-def _apriori_k(spark, monkeypatch):
+    "apriori_pairs": (5, [["a", "b", "c", "d"]] * 3, 1, "up to k=2", True),
     # 10 sets after k=2 fit a cap of 12; the 4 triples at k=3 do not
-    _son(spark, monkeypatch, 12, [["a", "b", "c", "d"]] * 3, 1)
-
-
-def _son_phase1(spark, monkeypatch):
+    "apriori_k": (12, [["a", "b", "c", "d"]] * 3, 1, "up to k=3", True),
     # 40 one-item baskets spread over 8 partitions: each partition's
     # frequent sets fit a cap of 20, their union does not
-    _son(spark, monkeypatch, 20, [[f"i{n}"] for n in range(40)], 8)
-
-
-def _reservoir(spark, monkeypatch):
-    from data_mining_map_reduce_spark.streaming.reservoir import ReservoirSampler
-
-    batch = spark.range(50).withColumnRenamed("id", "event_id")
-    ReservoirSampler(capacity=5).foreach_batch("event_id", batch_cap=10)(batch, 3)
-
-
-# site -> (trigger, text of the op, knob, a phrase of the remedy,
-# raised on a worker)
-BUDGETS = {
-    "exact_pairs": (
-        _exact_pairs, "exact_jaccard_pairs", "SPARK_GRAFT_EXACT_PAIRS_MAX",
-        "_lsh", False,
-    ),
-    "lsh_verify": (
-        _lsh_verify, "minhash_lsh_pairs", "SPARK_GRAFT_LSH_VERIFY_BUDGET",
-        "max_bucket", False,
-    ),
-    "max_probes": (
-        _max_probes, "cosine_topk", "max_probes", "hyperplane_lsh_topk", False,
-    ),
-    "max_cluster_rows": (
-        _max_cluster_rows, "semantic_near_dup_pairs", "max_cluster_rows",
-        "target_cluster_size", False,
-    ),
-    "apriori_pairs": (
-        _apriori_pairs, "up to k=2", "CANDIDATE_CAP", "raise `support`", True,
-    ),
-    "apriori_k": (
-        _apriori_k, "up to k=3", "CANDIDATE_CAP", "raise `support`", True,
-    ),
     "son_phase1": (
-        _son_phase1, "SON phase-1 candidates", "CANDIDATE_CAP",
-        "raise `support`", False,
-    ),
-    "batch_cap": (
-        _reservoir, "micro-batch 3", "batch_cap", "keyed_reservoir", False,
+        20, [[f"i{n}"] for n in range(40)], 8, "SON phase-1 candidates", False,
     ),
 }
 
 
-@pytest.mark.parametrize("site", sorted(BUDGETS))
-def test_budget_guard_names_knob_and_remedy(spark, monkeypatch, site):
-    trigger, op, knob, remedy, on_worker = BUDGETS[site]
+@pytest.mark.parametrize("site", sorted(ITEMSET_CAPS))
+def test_itemset_cap_names_knob_and_remedy(spark, monkeypatch, site):
+    cap, baskets, num_partitions, op, on_worker = ITEMSET_CAPS[site]
     with pytest.raises(Exception) as info:
-        trigger(spark, monkeypatch)
+        _son(spark, monkeypatch, cap, baskets, num_partitions)
     msg = str(info.value)
     if on_worker:
         # raised inside mapInPandas; reaches the driver as a PythonException
         assert "GuardError" in msg, msg
     else:
         assert isinstance(info.value, GuardError), repr(info.value)
-    assert op in msg and f"exceeds {knob}=" in msg and remedy in msg, msg
+    assert op in msg and f"exceeds CANDIDATE_CAP={cap}" in msg, msg
+    assert "raise `support`" in msg, msg
 
 
 @pytest.mark.parametrize(
