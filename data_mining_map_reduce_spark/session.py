@@ -26,6 +26,11 @@ def _host_heap() -> str:
     return f"{min(16, max(1, int(0.4 * kb / (1024 * 1024))))}g"
 
 
+# Workers start the daemon module by name, so they need the directory
+# that holds the engine package on their path, wherever the driver runs.
+_ENGINE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(
     app_name: str = "data_mining_map_reduce_spark",
     extra_conf: dict[str, str] | None = None,
@@ -36,8 +41,16 @@ def get_spark(
     pin ``local[DEFAULT_CPUS]``. ``spark.sql.shuffle.partitions`` is
     the core count, at least 8 — on a cluster you'd size it so
     post-shuffle partitions land in the 64-256 MiB range (AQE
-    coalesces down).
+    coalesces down). Python workers start through ``pydaemon``
+    (``spark.python.daemon.module``), so each task imports the
+    installed pyspark instead of re-scanning ``pyspark.zip``.
     """
+    extra_conf = dict(extra_conf or {})
+    worker_pythonpath = os.pathsep.join(
+        p
+        for p in (extra_conf.pop("spark.executorEnv.PYTHONPATH", None), _ENGINE_PARENT)
+        if p
+    )
     builder = (
         SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
         .appName(app_name)
@@ -47,17 +60,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Default heap (_host_heap): 40% of host RAM, capped at 16g —
-        # NOT bigger: the r10 sf10 probe's one-variable isolation
-        # matrix (SCALE.md "64g-heap cliff") measured huge-hash-state
-        # operators monotonically DEGRADING with heap size — minhash @
-        # sf1 ran 56.8 s at 16 g, 105.3 s at 32 g, 436.9 s at 64 g
-        # (G1 random-probe locality over heap-resident hash state).
-        # The old 48 g default sat inside that cliff zone,
-        # contradicting the repo's own measurement. Moderate heaps +
-        # scale-out is the cluster design the probe validated;
-        # SPARK_GRAFT_DRIVER_MEM overrides for workloads that truly
-        # need driver headroom.
+        .config("spark.python.daemon.module", "data_mining_map_reduce_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)
+        # At most 16g: huge-hash-state operators slow down as the heap
+        # grows (SCALE.md "64g-heap cliff").
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_heap(),
@@ -73,7 +79,7 @@ def get_spark(
         # like the multimodal UDFs).
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
