@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .sketches import approx_distinct
+
 
 def count_rows(df: DataFrame) -> DataFrame:
     """A1: global count. Partial counts per partition, single-row
@@ -36,10 +38,11 @@ def distinct_count(df: DataFrame, col: str | Column, alias: str = "n") -> DataFr
 def approx_distinct_count(
     df: DataFrame, col: str | Column, rsd: float = 0.05, alias: str = "n_approx"
 ) -> DataFrame:
-    """A12 capability: HLL++ approximate distinct — the engine's
-    answer to Flajolet-Martin (Assignment6/task2.py:33-76). Constant
-    memory per partition; no shuffle of raw values, only sketches."""
-    return df.agg(F.approx_count_distinct(col, rsd).alias(alias))
+    """A12 capability: HLL approximate distinct (``sketches.approx_distinct``)
+    — the engine's answer to Flajolet-Martin (Assignment6/task2.py:33-76).
+    Constant memory per partition; no shuffle of raw values, only
+    sketches."""
+    return df.agg(approx_distinct(col, rsd).alias(alias))
 
 
 def top_k_by_count(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import FOLD_PRIME, hash_params
 from ..guards import require
+from .sketches import approx_distinct
 
 # Scale guard for the exact all-pairs twins: the exact self-join
 # paths exhaust local disk at ~500 k docs (SCALE.md "Exact all-pairs
@@ -90,8 +91,8 @@ def _guard_lsh_verify(
         # estimate on duplicate-heavy baskets. xxhash64 folds the pair
         # for one HLL (collisions are irrelevant at estimate precision).
         stats = exploded.agg(
-            F.approx_count_distinct(F.xxhash64("_k", "_h60")).alias("_pairs_d"),
-            F.approx_count_distinct("_k").alias("_keys"),
+            approx_distinct(F.xxhash64("_k", "_h60"), rsd=0.05).alias("_pairs_d"),
+            approx_distinct("_k", rsd=0.05).alias("_keys"),
         ).collect()[0]
         avg_set = stats["_pairs_d"] / max(stats["_keys"], 1)
         # Two bigint arrays per candidate row (8 B/element) + ~64 B of
@@ -122,9 +123,9 @@ def _guard_lsh_verify(
 
 def _guard_exact_pairs(df: DataFrame, key: str) -> None:
     # Single linear scan of the key column (map-side partial HLL, no
-    # shuffle of note); ±2% sketch error is irrelevant to a
-    # disk-death guard with a 2.5x safety margin under the measured
-    # failure point.
+    # shuffle of note). At rsd=0.05 the count is within ~±10% (2
+    # sigma), irrelevant to a disk-death guard with a 2.5x safety
+    # margin under the measured failure point.
     require(
         f"exact_jaccard_pairs distinct '{key}' sets (approx)",
         int(
@@ -132,7 +133,7 @@ def _guard_exact_pairs(df: DataFrame, key: str) -> None:
                 "SPARK_GRAFT_EXACT_PAIRS_MAX", str(EXACT_PAIRS_DEFAULT_MAX_KEYS)
             )
         ),
-        lambda: df.select(F.approx_count_distinct(key)).collect()[0][0],
+        lambda: df.select(approx_distinct(key, rsd=0.05)).collect()[0][0],
         "SPARK_GRAFT_EXACT_PAIRS_MAX",
         "this operator is the QUADRATIC VERIFICATION twin (it exhausts "
         "local disk at ~500k docs at sf10) — use the banded MinHash-LSH "

@@ -267,6 +267,32 @@ def fm_distinct_estimate_by(
     return grouped.select(*group_cols, F.round(median, 4).alias(alias))
 
 
+def approx_distinct(col: str | Column, rsd: float) -> Column:
+    """A12: the engine's one approximate-distinct aggregate, a bigint
+    column usable in any ``agg`` (global or grouped). Built on Spark's
+    DataSketches HLL (``hll_sketch_estimate(hll_sketch_agg(col, lg_k))``)
+    with ``lg_k = ceil(2·log2(1.106 / rsd))``, Spark's own HLL++
+    register formula, so a given ``rsd`` keeps HLL++'s register count
+    and error bound (rsd 0.02 → 4096 registers, 0.05 → 512).
+
+    Why not ``approx_count_distinct``: HLL++ packs ten 6-bit registers
+    into each long field of the aggregation buffer (410 fields at rsd
+    0.02), and each task pays a fixed cost inside the aggregate that
+    grows with that width, not with the rows: on 4 vCPUs a one-row
+    map task spent 0.3-0.46 s in aggregation build at rsd 0.02 and
+    2-15 ms with this sketch, whose buffer is one binary field at any
+    ``lg_k``.
+
+    Nulls are ignored and an empty input estimates 0. The sketch takes
+    INT, BIGINT, STRING and BINARY input; any other type fails analysis
+    with DATATYPE_MISMATCH naming those types. Every caller passes one
+    of them, so no cast or hash fallback is added here. An ``rsd`` whose
+    ``lg_k`` falls outside the sketch's 4..21 range also fails
+    analysis."""
+    lg_k = math.ceil(2.0 * math.log2(1.106 / rsd))
+    return F.hll_sketch_estimate(F.hll_sketch_agg(col, lg_k))
+
+
 def kmv_distinct_estimate(
     df: DataFrame,
     col: str,
@@ -282,8 +308,8 @@ def kmv_distinct_estimate(
     (TakeOrderedAndProject: per-partition top-k, no global sort) →
     one tiny aggregate. Mergeable like any KMV sketch (union = merge
     + re-truncate). md5-derived hash ⇒ the whole estimate replays in
-    a DuckDB oracle — unlike HLL++, whose register layout is engine
-    internals."""
+    a DuckDB oracle — unlike the HLL sketch (:func:`approx_distinct`),
+    whose register layout is engine internals."""
     from ..functions.hashing import md5_hash60
 
     hashes = (

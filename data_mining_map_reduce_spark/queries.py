@@ -762,8 +762,9 @@ def session_windows_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A12: approximate distinct count (HLL++). No SQL oracle — estimator
-# differs by engine; accuracy vs exact is asserted in pytest
+# A12: approximate distinct count (HLL sketch, operators/sketches
+# .approx_distinct). No SQL oracle — the register layout is engine
+# internals; accuracy vs exact is asserted in pytest
 # (tests/test_sketches.py), mirroring the reference's FM grading.
 # ---------------------------------------------------------------------------
 @query("approx_distinct_users")
@@ -1055,7 +1056,7 @@ def source_mix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # KMV (k-minimum-values) distinct estimator, Bar-Yossef et al. 2002 —
 # the third cardinality sketch next to FM (reference estimator) and
-# HLL++ (engine-native): mergeable, tunable accuracy (~1/sqrt(k)),
+# HLL (engine-native): mergeable, tunable accuracy (~1/sqrt(k)),
 # and — with the md5-derived hash — fully oracle-replayable. Plans as
 # distinct-hash projection → TakeOrderedAndProject (per-partition
 # top-k, no global sort) → one-row aggregate.
@@ -1113,14 +1114,12 @@ def reservoir_sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ST4, both halves in one row (r16 verdict task 8: the former
-# window_distinct_users_exact/_approx twins merged, identical
-# operator evidence): per-window EXACT distinct users (windowed
-# countDistinct) joined with the per-window Flajolet-Martin estimate
-# — the reference's ACTUAL A6-task2 emission shape (one (time,
-# truth, estimate) row per window, Assignment6/task2.py:87-91).
+# ST4, both halves in one row: per-window EXACT distinct users
+# (windowed countDistinct) joined with the per-window Flajolet-Martin
+# estimate — the reference's ACTUAL A6-task2 emission shape (one
+# (time, truth, estimate) row per window, Assignment6/task2.py:87-91).
 # FULL oracle: exact half is plain SQL; the md5-derived FM family
-# replays per window in DuckDB (the global HLL++ twin
+# replays per window in DuckDB (the global HLL twin
 # `approx_distinct_users` stays as the engine-native alternative,
 # rows-only by nature). Per-window accuracy also pytest-asserted.
 # ---------------------------------------------------------------------------
@@ -4796,13 +4795,13 @@ def doc_length_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ---------------------------------------------------------------------------
 # Semantically-checked driver row for the two rows-only sketch tiers
-# (the ann_recall_check / betweenness_mass_check pattern): HLL++'s
+# (the ann_recall_check / betweenness_mass_check pattern): the HLL
 # distinct estimate and percentile_approx's rank accuracy are pinned
 # against exact anchors the DuckDB oracle genuinely recomputes
 # (exact COUNT(DISTINCT) and the exact interpolated median). If
 # either sketch degrades past its bound, the Spark side emits
 # within_bound=false and the driver row goes red on VALUES, not
-# just rows. Bounds: HLL++ rsd=0.02 -> |rel err| <= 0.05 (2.5
+# just rows. Bounds: HLL rsd=0.02 -> |rel err| <= 0.05 (2.5
 # sigma; the sketch is deterministic for fixed data, so this is a
 # regression pin, not a coin flip); percentile_approx accuracy=10000
 # -> the returned value's tie-aware rank interval must contain the
@@ -4823,11 +4822,13 @@ def doc_length_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def sketch_error_check(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.sketches import approx_distinct
+
     events = load_table(spark, sf_dir, "events")
     docs = load_table(spark, sf_dir, "documents")
     hll_row = events.agg(
         F.count_distinct("user_id").alias("exact"),
-        F.approx_count_distinct("user_id", rsd=0.02).alias("est"),
+        approx_distinct("user_id", rsd=0.02).alias("est"),
     ).select(
         F.lit("hll_user_id").alias("metric"),
         F.col("exact").cast("double").alias("exact_anchor"),

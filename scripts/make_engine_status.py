@@ -65,7 +65,7 @@ SURVEY_ROWS: list[tuple[str, str, list[str], str]] = [
     ("A9", "Vector mean centroid", ["kmeans_wcss_check"], "pytest"),
     ("A10", "MinHash signature", ["minhash_lsh_pairs"], "md5 hash replayed in DuckDB"),
     ("A11", "SON + FPGrowth itemsets", ["son_itemsets", "fpgrowth_itemsets"], "SON==FPGrowth bit-identical at sf1"),
-    ("A12", "Approx distinct (FM/HLL++/KMV)", ["fm_distinct_users", "kmv_distinct_users", "approx_distinct_users", "sketch_error_check"], ""),
+    ("A12", "Approx distinct (FM/HLL/KMV)", ["fm_distinct_users", "kmv_distinct_users", "approx_distinct_users", "sketch_error_check"], ""),
     ("A13", "Bloom build + probe", ["bloom_probe_custkeys"], ""),
     ("A14", "Top-k with ties", ["top_users_by_orders", "top_customers_per_segment"], ""),
     ("A15", "Pearson CF (item & user)", ["cf_item_similarities", "cf_predictions", "cf_user_predictions"], ""),

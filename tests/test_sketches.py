@@ -4,16 +4,101 @@ exact recomputation + threshold, mirroring the reference's grading
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import ast
+from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+from data_mining_map_reduce_spark.operators import sketches
+from data_mining_map_reduce_spark.operators.sketches import approx_distinct
 from data_mining_map_reduce_spark.sources.catalog import load_table
+
+PKG = Path(sketches.__file__).resolve().parent.parent
 
 
 def test_approx_distinct_within_rsd(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     exact = events.agg(F.countDistinct("user_id")).collect()[0][0]
-    approx = events.agg(F.approx_count_distinct("user_id", 0.02)).collect()[0][0]
+    approx = events.agg(approx_distinct("user_id", 0.02)).collect()[0][0]
     assert abs(approx - exact) / exact <= 0.05, (exact, approx)
+
+
+@pytest.mark.parametrize(
+    "rows, exact, tol",
+    [
+        # enough distinct values that the sketch estimates (at sf0.01
+        # it counts user_id exactly); rsd 0.02 -> 2.5 sigma
+        (lambda s: s.range(1_000_003), 1_000_003, 0.05),
+        (lambda s: s.range(0), 0, 0.0),
+        (
+            lambda s: s.createDataFrame(
+                [(1,), (None,), (2,), (None,), (2,)], "id bigint"
+            ),
+            2,
+            0.0,
+        ),
+    ],
+    ids=["million", "empty", "nulls"],
+)
+def test_approx_distinct_estimate(spark, rows, exact, tol):
+    out = rows(spark).agg(approx_distinct("id", rsd=0.02).alias("n"))
+    assert out.schema["n"].dataType == LongType()
+    n = out.collect()[0].n
+    assert abs(n - exact) <= tol * exact, (exact, n)
+
+
+_HLL_NAMES = {"approx_count_distinct", "approxCountDistinct"}
+
+
+def _raw_hll_calls(tree: ast.AST) -> list[int]:
+    """Line numbers of every ``approx_count_distinct`` call, as a
+    function (``F.approx_count_distinct(...)``) or inside a SQL string
+    (``F.expr("approx_count_distinct(...)")``), outside a function
+    named ``approx_distinct``."""
+    skip = {
+        id(n)
+        for d in ast.walk(tree)
+        if isinstance(d, ast.FunctionDef) and d.name == "approx_distinct"
+        for n in ast.walk(d)
+    }
+    lines = []
+    for node in ast.walk(tree):
+        if id(node) in skip:
+            continue
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in _HLL_NAMES:
+                lines.append(node.lineno)
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "approx_count_distinct(" in node.value.lower()
+        ):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
+def test_approx_distinct_only_in_sketches():
+    found = [
+        f"{path.relative_to(PKG.parent)}:{line}"
+        for path in sorted(PKG.rglob("*.py"))
+        for line in _raw_hll_calls(ast.parse(path.read_text(), filename=str(path)))
+    ]
+    assert not found, f"approx_count_distinct outside sketches.approx_distinct: {found}"
+
+
+def test_hll_scan_sees_every_form():
+    tree = ast.parse(
+        "a = F.approx_count_distinct('x', 0.02)\n"
+        "b = (df.agg(\n    approxCountDistinct(c)))\n"
+        "c = F.expr('APPROX_COUNT_DISTINCT(u)')\n"
+        "def approx_distinct(col, rsd):\n    return F.approx_count_distinct(col, rsd)\n"
+        "d = F.hll_sketch_agg('x', 12)\n"
+    )
+    assert _raw_hll_calls(tree) == [1, 3, 4]
 
 
 def test_bloom_no_false_negatives_and_fpr_bound(spark, sf_dir):
@@ -81,7 +166,7 @@ def test_windowed_approx_distinct_per_window(spark, sf_dir):
     approx = {
         r.window_start: r.n
         for r in events.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.approx_count_distinct("user_id", 0.02).alias("n"))
+        .agg(approx_distinct("user_id", 0.02).alias("n"))
         .select(F.col("w.start").alias("window_start"), "n")
         .collect()
     }
