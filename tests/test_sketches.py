@@ -11,11 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from data_mining_map_reduce_spark.operators import sketches
 from data_mining_map_reduce_spark.operators.sketches import approx_distinct
 from data_mining_map_reduce_spark.sources.catalog import load_table
 
-PKG = Path(sketches.__file__).resolve().parent.parent
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "data_mining_map_reduce_spark"
 
 
 def test_approx_distinct_within_rsd(spark, sf_dir):
@@ -83,7 +83,7 @@ def _raw_hll_calls(tree: ast.AST) -> list[int]:
 
 def test_approx_distinct_only_in_sketches():
     found = [
-        f"{path.relative_to(PKG.parent)}:{line}"
+        f"{path.relative_to(ROOT)}:{line}"
         for path in sorted(PKG.rglob("*.py"))
         for line in _raw_hll_calls(ast.parse(path.read_text(), filename=str(path)))
     ]
