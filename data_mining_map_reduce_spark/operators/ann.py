@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, dot
 from ..guards import require
+from .relational import cap_buckets
 
 
 def _as_double_vec(col: str) -> Column:
@@ -153,21 +154,6 @@ def hyperplane_signature(
     return F.array(*band_vals)
 
 
-def _cap_buckets(banded: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Drop (band, value) buckets larger than ``max_bucket`` — the
-    same skew guard as MinHash LSH (operators/similarity.py): a
-    bucket with B members yields O(B²) candidate rows (self-join) or
-    B rows per colliding probe, while carrying almost no signal
-    (everything collides). Count + semi-join, window-free."""
-    if max_bucket is None:
-        return banded
-    sizes = banded.groupBy("_band", "_bval").agg(F.count(F.lit(1)).alias("_bsz"))
-    return banded.join(
-        sizes.where(F.col("_bsz") <= max_bucket).select("_band", "_bval"),
-        ["_band", "_bval"],
-    )
-
-
 def hyperplane_lsh_topk(
     emb: DataFrame,
     probes: DataFrame,
@@ -208,7 +194,10 @@ def hyperplane_lsh_topk(
 
     pairs = (
         banded(probes, "probe")
-        .join(_cap_buckets(banded(emb, "neighbor"), max_bucket), ["_band", "_bval"])
+        .join(
+            cap_buckets(banded(emb, "neighbor"), ["_band", "_bval"], max_bucket),
+            ["_band", "_bval"],
+        )
         .where(F.col("neighbor_id") != F.col("probe_id"))
         .select("probe_id", "neighbor_id")
         .distinct()

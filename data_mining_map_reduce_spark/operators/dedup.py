@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hamming64
 from ..functions.text import normalize, tokenize, word_ngrams
+from .relational import bucket_pairs, cap_buckets
 
 
 def doc_shingles(
@@ -254,9 +255,9 @@ def fingerprint_overlap_pairs(
     p99 is 13 — ten keeps full recall with margin while cutting ~99%
     of incidental-English-8-gram pairs.
     Fingerprints appearing in more than ``max_df`` docs are dropped
-    before the self-join — boilerplate grams carry no ranking signal
-    and are exactly the skew that blows up a fingerprint-keyed join
-    at corpus scale (same cap discipline as the LSH bucket guard).
+    before the self-join (``cap_buckets``, the LSH bucket cap) —
+    boilerplate grams carry no ranking signal and are exactly the
+    skew that blows up a fingerprint-keyed join at corpus scale.
 
     Returns (doc_a, doc_b, n_shared).
     """
@@ -278,18 +279,10 @@ def fingerprint_overlap_pairs(
     fps = winnow_fingerprints(docs, id_col, text_col, k, window).localCheckpoint(
         eager=False
     )
-    kept = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .where((F.col("_df") >= 2) & (F.col("_df") <= max_df))
-        .select("fp")
-    )
-    shared = fps.join(kept, "fp")
-    lhs = shared.select(F.col(id_col).alias("doc_a"), "fp")
-    rhs = shared.select(F.col(id_col).alias("doc_b"), "fp")
     return (
-        lhs.join(rhs, "fp")
-        .where(F.col("doc_a") < F.col("doc_b"))
+        bucket_pairs(
+            cap_buckets(fps, ["fp"], max_df), id_col, ["fp"], "doc_a", "doc_b"
+        )
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
@@ -364,17 +357,13 @@ def hamming_band_pairs(
     # repeated invocations in a long-lived session leave no
     # storage-tab residue.
     banded = fp.localCheckpoint(eager=True).select(
-        F.col(id_col), hash_col, *by, F.explode(F.array(*keys)).alias("_bkey")
-    )
-    lhs = banded.select(
-        F.col(id_col).alias("a"), F.col(hash_col).alias("_ha"), *by, "_bkey"
-    )
-    rhs = banded.select(
-        F.col(id_col).alias("b"), F.col(hash_col).alias("_hb"), *by, "_bkey"
+        F.col(id_col),
+        F.col(hash_col).alias("_h"),
+        *by,
+        F.explode(F.array(*keys)).alias("_bkey"),
     )
     return (
-        lhs.join(rhs, ["_bkey", *by])
-        .where(F.col("a") < F.col("b"))
+        bucket_pairs(banded, id_col, ["_bkey", *by], "a", "b", carry=("_h",))
         .select(
             "a", "b", hamming64(F.col("_ha"), F.col("_hb")).alias("hamming"), *by
         )

@@ -9,9 +9,9 @@ Pipeline shapes, all relational:
 - similarities: self-join ratings on the co-key (user for item-item,
   item for user-user), Pearson per pair with >= min_co co-ratings.
   One shuffle on the co-key join + one on the pair groupBy — the same
-  equi-join rewrite as J3.
+  equi-join rewrite as J3 (``relational.bucket_pairs``).
 
-Determinism contract (r10 verdict task 1): Pearson is computed from
+Determinism contract: Pearson is computed from
 EXACT integer sufficient statistics, never from float aggregation.
 Ratings are 6-dp quantities (ROUND(avg, 6)), so ``rating * 1e6`` is
 an exact BIGINT; n, Σx, Σy, Σxy, Σx², Σy² are then integer sums —
@@ -25,8 +25,8 @@ pairs are detected EXACTLY (min == max on the integer ratings), not
 via float-variance == 0. Rationale: covar_samp/stddev (and DuckDB's
 corr()) are float-summation-order dependent, and ROUND(·, 6) flips
 when a pair's correlation lands within an ulp of a 6th-decimal
-boundary — cf_item_similarities went hash-red in the r10 driver
-window on exactly that (green r5-r8, green on re-runs).
+boundary — cf_item_similarities went intermittently hash-red against
+its oracle on exactly that (SCALE.md "Deterministic Pearson").
 - prediction: candidate neighbors joined through the similarity
   table (positive sims only), top-N by similarity (window), then the
   weighted average Σ(sim·r)/Σ(sim) — reference formula, A3 PDF §4.3.
@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .relational import bucket_pairs
+
 RATING_SCALE = 1_000_000  # 6-dp ratings -> exact integer micro-units
 
 
@@ -59,7 +61,7 @@ def _micros(col: Column | str) -> Column:
 # micro-ratings (<= (5e7)² = 2.5e15) fit BIGINT, but their GROUP sums
 # don't at scale — and summing through DECIMAL buffers measured 2× the
 # whole aggregation wall at sf0.1 (decimal aggs fall out of Tungsten's
-# primitive fast path; BENCH_NOTES r11). So each product is split into
+# primitive fast path). So each product is split into
 # (p >> 26, p & (2^26 - 1)) and the two halves are summed as plain
 # BIGINTs: hi <= 3.7e7 and lo <= 6.7e7 per row, so both sums stay
 # exact past 1e11 rows per pair — far beyond any co-rating count — at
@@ -71,10 +73,10 @@ SPLIT_BASE = 1 << SPLIT_SHIFT
 
 
 def _pearson_suffstat_aggs() -> list[Column]:
-    """Aggregates over per-row integer micro-ratings ``_xa6``/``_xb6``
+    """Aggregates over per-row integer micro-ratings ``_xa``/``_xb``
     — all plain BIGINT (see SPLIT_SHIFT note), integer-exact and
     order-independent."""
-    xa, xb = F.col("_xa6"), F.col("_xb6")
+    xa, xb = F.col("_xa"), F.col("_xb")
 
     def split_sums(p: Column, name: str) -> list[Column]:
         return [
@@ -150,19 +152,13 @@ def item_similarities(
     pairs (corr undefined) are dropped. Deterministic by construction
     (module docstring): exact integer sufficient statistics, one
     IEEE-double closed form."""
-    a = ratings.select(
+    co = ratings.select(
         F.col(user_col).alias("_u"),
-        F.col(item_col).alias("i1"),
-        _micros(rating_col).alias("_xa6"),
-    )
-    b = ratings.select(
-        F.col(user_col).alias("_u"),
-        F.col(item_col).alias("i2"),
-        _micros(rating_col).alias("_xb6"),
+        F.col(item_col).alias("_i"),
+        _micros(rating_col).alias("_x"),
     )
     return (
-        a.join(b, "_u")
-        .where(F.col("i1") < F.col("i2"))
+        bucket_pairs(co, "_i", ["_u"], "i1", "i2", carry=("_x",))
         .groupBy("i1", "i2")
         .agg(*_pearson_suffstat_aggs())
         .withColumn("_c", _pearson_sim())
@@ -308,12 +304,12 @@ def user_similarities(
     a = ratings.select(
         F.col(item_col).alias("_i"),
         F.col(user_col).alias("u1"),
-        _micros(rating_col).alias("_xa6"),
+        _micros(rating_col).alias("_xa"),
     )
     b = ratings.select(
         F.col(item_col).alias("_i"),
         F.col(user_col).alias("u2"),
-        _micros(rating_col).alias("_xb6"),
+        _micros(rating_col).alias("_xb"),
     )
     if candidate_pairs is not None:
         # Candidates DRIVE the join — co-ratings are assembled only

@@ -92,6 +92,59 @@ def baskets(
     return df.groupBy(key).agg(F.array_sort(F.collect_set(item)).alias(alias))
 
 
+def cap_buckets(
+    df: DataFrame,
+    keys: list[str],
+    max_bucket: int | None,
+    sizes: DataFrame | None = None,
+) -> DataFrame:
+    """X4/X6 hot-bucket cap: keep the rows of ``df`` whose bucket (equal
+    ``keys``) holds at most ``max_bucket`` rows; ``df`` unchanged when
+    ``max_bucket`` is None.
+
+    A bucket of B rows yields B(B-1)/2 self-join rows (or B rows per
+    probe that hits it) while carrying almost no signal, since
+    everything in it collides. One count and one semi-join, window-free.
+    ``sizes`` is the bucket histogram (``keys`` + ``_bsz``, as
+    ``count_by(df, *keys, alias="_bsz")`` builds it) when the caller
+    already has one, so a pinned histogram is read, not regrouped.
+    """
+    if max_bucket is None:
+        return df
+    if sizes is None:
+        sizes = count_by(df, *keys, alias="_bsz")
+    return df.join(sizes.where(F.col("_bsz") <= max_bucket).select(*keys), keys)
+
+
+def bucket_pairs(
+    df: DataFrame,
+    id_col: str,
+    keys: list[str],
+    a: str,
+    b: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """J4/J6 bucket self-join: every pair of rows of ``df`` with equal
+    ``keys``, ids ``id_col`` renamed to ``a`` < ``b`` (J6: each
+    unordered pair once per shared bucket). Each ``carry`` column ``c``
+    comes back once per side, as ``c + "a"`` and ``c + "b"``. Returns
+    (``keys``, a, carried a-side, b, carried b-side).
+
+    One shuffle on ``keys`` (both sides read the same exchange). A hot
+    bucket of B rows is B²/2 output rows in one task: cap it with
+    :func:`cap_buckets` when the caller's contract allows dropping it.
+    """
+
+    def side(alias: str, suffix: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(alias),
+            *keys,
+            *(F.col(c).alias(c + suffix) for c in carry),
+        )
+
+    return side(a, "a").join(side(b, "b"), keys).where(F.col(a) < F.col(b))
+
+
 def co_occurrence_pairs(
     df: DataFrame,
     key: str,
@@ -105,29 +158,27 @@ def co_occurrence_pairs(
 
     The reference discovers graph edges with an O(V^2) driver loop
     over a collected dict (Assignment4/task1.py:32-47). Here:
-    distinct (key,item) pairs self-joined on item, pair-counted,
-    filtered to >= min_shared, emitted once with a < b. Shuffles: one
-    on item for the join, one on the pair for the count — both scale
-    out; hot items are handled by AQE skew-join splitting.
+    distinct (key,item) pairs self-joined on item
+    (:func:`bucket_pairs`), pair-counted, filtered to >= min_shared.
+    Shuffles: one on item for the join, one on the pair for the
+    count — both scale out; hot items are handled by AQE skew-join
+    splitting.
 
-    Scale note (r14, measured): the pair expansion is Σdᵢ² over item
-    degree. On FLAT-degree corpora that is volume-linear and this
-    exact build is the right plan — at sf10 (degree ~10, max banded
-    bucket 73) it beats the LSH pre-cut 350.6 s vs 758.7 s because
-    ~40-item baskets against 32 minhashes leave banding nothing to
-    prune (343M candidate rows vs 300M exact pair rows, SCALE.md
-    r14). Under DEGREE SKEW the d² term owns the shuffle and this
-    build dies first; there prefer :func:`co_occurrence_pairs_lsh`,
-    whose output provably refines this one (identical counts,
-    banded-recall contract) and whose buckets stay ~d/|basket| wide
-    regardless of a hot item's degree (skew receipt: SCALE.md r14).
+    The pair expansion is Σdᵢ² over item degree. On FLAT-degree
+    corpora that is volume-linear and this exact build is the right
+    plan — at sf10 (degree ~10, max banded bucket 73) it beats the LSH
+    pre-cut 350.6 s vs 758.7 s because ~40-item baskets against 32
+    minhashes leave banding nothing to prune (343M candidate rows vs
+    300M exact pair rows). Under DEGREE SKEW the d² term owns the
+    shuffle and this build dies first; there prefer
+    :func:`co_occurrence_pairs_lsh`, whose output provably refines this
+    one (identical counts, banded-recall contract) and whose buckets
+    stay ~d/|basket| wide regardless of a hot item's degree. Receipts:
+    SCALE.md "The pre-cut's win regime, measured: degree skew".
     """
     base = df.select(F.col(key).alias("_k"), F.col(item).alias("_i")).distinct()
-    left = base.select(F.col("_k").alias(left_alias), "_i")
-    right = base.select(F.col("_k").alias(right_alias), "_i")
     return (
-        left.join(right, "_i")
-        .where(F.col(left_alias) < F.col(right_alias))  # J6: unordered pair once
+        bucket_pairs(base, "_k", ["_i"], left_alias, right_alias)
         .groupBy(left_alias, right_alias)
         .agg(F.count(F.lit(1)).alias(count_alias))
         .where(F.col(count_alias) >= min_shared)
@@ -146,8 +197,8 @@ def co_occurrence_pairs_lsh(
     bands: int = 32,
     max_bucket: int | None = 5000,
 ) -> DataFrame:
-    """LSH-pre-cut twin of :func:`co_occurrence_pairs` (r13 verdict
-    task 1): banded-minhash candidate generation over the (key →
+    """LSH-pre-cut twin of :func:`co_occurrence_pairs`:
+    banded-minhash candidate generation over the (key →
     items) baskets replaces the exact Σdᵢ² pair expansion, then the
     shared-item count of each surviving candidate is verified EXACTLY
     and filtered to >= min_shared.
@@ -158,16 +209,17 @@ def co_occurrence_pairs_lsh(
     by the banding vs each qualifying pair's JACCARD, not its raw
     overlap: a pair sharing min_shared items out of huge baskets has
     low Jaccard and may miss every band. One caveat on "identical
-    counts" (ADVICE r14): the verify intersects 60-bit md5 ITEM
+    counts": the verify intersects 60-bit md5 ITEM
     HASHES while the exact twin (and the DuckDB replay) counts raw
     items, so two distinct items of one pair's union colliding in 60
     bits would inflate n_shared — P ≈ n²/2⁶¹ per pair, the same seam
     every md5-folded family member documents; negligible at any
     corpus size this engine runs.
 
-    WHEN to use which twin — measured, not assumed (SCALE.md r14):
-    this build's candidate volume is what banding leaves after
-    sampling ≤ num_hashes minima per basket and capping hot buckets.
+    WHEN to use which twin — measured, not assumed (receipts cited in
+    :func:`co_occurrence_pairs`): this build's candidate volume is what
+    banding leaves after sampling ≤ num_hashes minima per basket and
+    capping hot buckets.
     On the FLAT synthetic corpus (degree ~10, ~40-item baskets vs 32
     hashes) banding prunes nothing — 343M candidate rows vs the exact
     build's 300M at sf10 — and the signature + dedup overhead makes
@@ -176,7 +228,7 @@ def co_occurrence_pairs_lsh(
     shuffle but only ~(d/|basket|)²-wide buckets here (each holder's
     minimum is the hot item with prob ~1/|basket|), so this build's
     wall barely moves while the exact one's explodes — the skew
-    receipt in SCALE.md r14 measures exactly that. Use exact on
+    receipt measures exactly that. Use exact on
     flat/bounded-degree relations; use this one when the item-degree
     distribution is heavy-tailed (the 100 TB default) or baskets are
     large relative to num_hashes (documents/shingles).

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import FOLD_PRIME, hash_params
 from ..guards import require
+from .relational import bucket_pairs, cap_buckets, co_occurrence_pairs, count_by
 from .sketches import approx_distinct
 
 # Scale guard for the exact all-pairs twins: the exact self-join
@@ -79,7 +80,7 @@ def _guard_lsh_verify(
         if bucket_sizes is not None and max_bucket is not None:
             hist = bucket_sizes.where(F.col("_bsz") <= max_bucket)
         else:
-            hist = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_bsz"))
+            hist = count_by(banded, "_bucket", alias="_bsz")
         pairs = hist.agg(
             F.coalesce(
                 F.sum(F.col("_bsz") * (F.col("_bsz") - 1) / 2), F.lit(0.0)
@@ -206,14 +207,7 @@ def exact_jaccard_pairs(
         prefix_filter = threshold >= 0.3
 
     if not prefix_filter:
-        left = base.select(F.col("_k").alias(key_a), "_i")
-        right = base.select(F.col("_k").alias(key_b), "_i")
-        inter = (
-            left.join(right, "_i")
-            .where(F.col(key_a) < F.col(key_b))
-            .groupBy(key_a, key_b)
-            .agg(F.count(F.lit(1)).alias("_inter"))
-        )
+        inter = co_occurrence_pairs(base, "_k", "_i", 1, key_a, key_b, "_inter")
         # No broadcast hint on the per-key size tables: one row per set
         # key means billions of rows at corpus scale, where a forced
         # broadcast is impossible. Catalyst/AQE broadcasts them anyway
@@ -267,23 +261,11 @@ def exact_jaccard_pairs(
     # collisions BEFORE the pair-dedup shuffle and verify join is
     # lossless. Same round-to-6dp guard as prefix_len so float
     # epsilon in t*n never discards a boundary-qualifying pair.
-    collisions = (
-        prefix.select(
-            F.col("_k").alias(key_a), "_i", F.col("_sz").alias("_sza"),
-            F.col("_rn").alias("_rna"),
-        )
-        .join(
-            prefix.select(
-                F.col("_k").alias(key_b), "_i", F.col("_sz").alias("_szb"),
-                F.col("_rn").alias("_rnb"),
-            ),
-            "_i",
-        )
-        .where(
-            (F.col(key_a) < F.col(key_b))
-            & (F.col("_sza") >= F.round(F.lit(threshold) * F.col("_szb"), 6))
-            & (F.col("_szb") >= F.round(F.lit(threshold) * F.col("_sza"), 6))
-        )
+    collisions = bucket_pairs(
+        prefix, "_k", ["_i"], key_a, key_b, carry=("_sz", "_rn")
+    ).where(
+        (F.col("_sza") >= F.round(F.lit(threshold) * F.col("_szb"), 6))
+        & (F.col("_szb") >= F.round(F.lit(threshold) * F.col("_sza"), 6))
     )
     # Positional filter (ppjoin, Xiao et al. WWW'08): the pair-dedup
     # groupBy (same shuffle the old .distinct() paid) also keeps each
@@ -519,27 +501,16 @@ def minhash_lsh_pairs(
 
     bucket_sizes = None
     if max_bucket is not None:
-        # Cap pathological buckets: a bucket with B keys yields B^2/2
-        # candidate rows; beyond max_bucket the bucket carries almost
-        # no signal (everything collides) and only destroys the
-        # shuffle. Window-free count+join keeps it scalable.
-        bucket_sizes = banded.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_bsz"))
+        bucket_sizes = count_by(banded, "_bucket", alias="_bsz")
         if verify and materialize:
             # two consumers (the cap join here and the guard's mass
             # estimate below) — pinned so the histogram is grouped
             # once; slim (bucket struct + one long). The guard's
             # collect doubles as the materializing action.
             bucket_sizes = bucket_sizes.localCheckpoint(eager=False)
-        banded = banded.join(
-            bucket_sizes.where(F.col("_bsz") <= max_bucket).select("_bucket"),
-            "_bucket",
-        )
-
-    lhs = banded.select(F.col("_k").alias(key_a), "_bucket")
-    rhs = banded.select(F.col("_k").alias(key_b), "_bucket")
+    banded = cap_buckets(banded, ["_bucket"], max_bucket, bucket_sizes)
     candidates = (
-        lhs.join(rhs, "_bucket")
-        .where(F.col(key_a) < F.col(key_b))
+        bucket_pairs(banded, "_k", ["_bucket"], key_a, key_b)
         .select(key_a, key_b)
         .distinct()
     )

@@ -412,10 +412,10 @@ def corr_qty_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
     scaled = lineitem.select(
         "l_returnflag",
-        F.round(F.col("l_quantity") * F.lit(100.0)).cast("long").alias("_xa6"),
+        F.round(F.col("l_quantity") * F.lit(100.0)).cast("long").alias("_xa"),
         F.round(F.col("l_extendedprice") * F.lit(100.0))
         .cast("long")
-        .alias("_xb6"),
+        .alias("_xb"),
     )
     return (
         scaled.groupBy("l_returnflag")
@@ -1869,19 +1869,10 @@ def frequent_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a = li.select(F.col("o"), F.col("p").alias("item1"))
-    b = li.select(F.col("o"), F.col("p").alias("item2"))
-    return (
-        a.join(b, "o")
-        .where(F.col("item1") < F.col("item2"))
-        .groupBy("item1", "item2")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .where(F.col("support") >= 3)
-        .orderBy("item1", "item2")
-    )
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return R.co_occurrence_pairs(
+        lineitem, "l_partkey", "l_orderkey", 3, "item1", "item2", "support"
+    ).orderBy("item1", "item2")
 
 
 # ---------------------------------------------------------------------------

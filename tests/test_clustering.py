@@ -26,8 +26,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def points(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
+def points(module_spark):
+    emb = load_table(module_spark, SF_DIR, "embeddings")
     return emb.select(
         F.col("vec_id").alias("id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("vec"),

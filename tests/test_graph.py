@@ -14,12 +14,12 @@ CLIQUE_B = [5, 6, 7, 8]
 
 
 @pytest.fixture(scope="module")
-def planted_edges(spark):
+def planted_edges(module_spark):
     edges = []
     for clique in (CLIQUE_A, CLIQUE_B):
         edges += [(a, b) for a in clique for b in clique if a < b]
     edges.append((4, 5))  # bridge
-    return spark.createDataFrame(edges, "src int, dst int").cache()
+    return module_spark.createDataFrame(edges, "src int, dst int").cache()
 
 
 def test_connected_components_single(spark, planted_edges):

@@ -19,8 +19,8 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def scored(spark):
-    docs = load_table(spark, SF, "documents")
+def scored(module_spark):
+    docs = load_table(module_spark, SF, "documents")
     return quality_classifier_scores(docs, target_value="src0").collect()
 
 

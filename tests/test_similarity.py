@@ -4,14 +4,27 @@ grading rule."""
 
 from __future__ import annotations
 
+import ast
+import random
+from collections import Counter
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
-from data_mining_map_reduce_spark.operators.relational import baskets
+from data_mining_map_reduce_spark.operators.relational import (
+    baskets,
+    bucket_pairs,
+    cap_buckets,
+)
 from data_mining_map_reduce_spark.operators.similarity import (
     exact_jaccard_pairs,
     minhash_lsh_pairs,
 )
 from data_mining_map_reduce_spark.queries import _customer_part_pairs
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "data_mining_map_reduce_spark"
 
 
 def test_lsh_recall_and_precision(spark, sf_dir):
@@ -186,3 +199,117 @@ def test_cooccurrence_lsh_hot_bucket_cap(spark):
     # hot's buckets hold up to 30 keys >> cap 3 and are dropped; the
     # qualifying pairs re-collide via a_i/b_i minima (bucket size 2)
     assert capped == exact
+
+
+HOT = 50  # ids in the planted bucket
+
+
+@pytest.mark.parametrize("max_bucket", [None, HOT - 1, HOT, HOT + 1])
+def test_bucket_pairs_capped_equals_brute_force(spark, max_bucket):
+    """``bucket_pairs(cap_buckets(...))`` against a Python brute force
+    over random (id, k1, k2, p) rows plus one planted bucket of HOT
+    distinct ids: the same pair multiset, each side's carried value,
+    a < b, and the cap dropping exactly the buckets with
+    more than ``max_bucket`` rows (HOT itself is kept at the
+    boundary)."""
+    rng = random.Random(11)
+    rows = [
+        (rng.randrange(60), rng.randrange(4), rng.randrange(4), rng.randrange(1000))
+        for _ in range(200)
+    ]
+    rows += [(i, 1, 9, rng.randrange(1000)) for i in rng.sample(range(100), HOT)]
+    df = spark.createDataFrame(rows, "id long, k1 int, k2 int, p int")
+    got = Counter(
+        tuple(r)
+        for r in bucket_pairs(
+            cap_buckets(df, ["k1", "k2"], max_bucket),
+            "id", ["k1", "k2"], "a", "b", carry=("p",),
+        )
+        .select("k1", "k2", "a", "pa", "b", "pb")
+        .collect()
+    )
+    size = Counter((k1, k2) for _, k1, k2, _ in rows)
+    want = Counter(
+        (k1, k2, i, p, j, q)
+        for i, k1, k2, p in rows
+        for j, l1, l2, q in rows
+        if (k1, k2) == (l1, l2)
+        and i < j
+        and (max_bucket is None or size[k1, k2] <= max_bucket)
+    )
+    hot = sum(n for (k1, k2, *_), n in want.items() if (k1, k2) == (1, 9))
+    kept = max_bucket is None or max_bucket >= HOT
+    assert hot == (HOT * (HOT - 1) // 2 if kept else 0)
+    assert sum(want.values()) - hot > 500
+    assert got == want
+
+
+def _pair_order_filters(tree: ast.AST) -> list[int]:
+    """Line numbers of every equi-join filtered to one pair order —
+    ``<x>.join(<y>, <keys>).where|filter(... F.col(a) < F.col(b) ...)``
+    — outside ``bucket_pairs`` and ``user_similarities``. A theta join
+    (``.join(y, F.col(a) < F.col(b))``) is not an equi-join and is
+    not flagged. ``user_similarities`` is allowed: its candidate mode
+    joins each side to the candidate pairs separately, so its exact
+    mode keeps the two sides as named frames instead of a bucket
+    self-join."""
+    skip = {
+        id(n)
+        for d in ast.walk(tree)
+        if isinstance(d, ast.FunctionDef)
+        and d.name in {"bucket_pairs", "user_similarities"}
+        for n in ast.walk(d)
+    }
+
+    def is_col(node: ast.AST) -> bool:
+        return isinstance(node, ast.Call) and (
+            getattr(node.func, "attr", None) == "col"
+            or getattr(node.func, "id", None) == "col"
+        )
+
+    def pair_order(node: ast.AST) -> bool:
+        return any(
+            isinstance(c, ast.Compare)
+            and isinstance(c.ops[0], ast.Lt)
+            and is_col(c.left)
+            and is_col(c.comparators[0])
+            for c in ast.walk(node)
+        )
+
+    lines = []
+    for node in ast.walk(tree):
+        if (
+            id(node) not in skip
+            and isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) in {"where", "filter"}
+            and isinstance(join := node.func.value, ast.Call)
+            and getattr(join.func, "attr", None) == "join"
+            and not any(pair_order(arg) for arg in join.args[1:2])
+            and any(pair_order(arg) for arg in node.args)
+        ):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
+def test_bucket_self_join_only_in_relational():
+    found = [
+        f"{path.relative_to(ROOT)}:{line}"
+        for path in sorted(PKG.rglob("*.py"))
+        for line in _pair_order_filters(
+            ast.parse(path.read_text(), filename=str(path))
+        )
+    ]
+    assert not found, f"bucket self-join outside relational.bucket_pairs: {found}"
+
+
+def test_pair_order_scan_sees_old_forms():
+    tree = ast.parse(
+        "a = lhs.join(rhs, '_bucket').where(F.col(key_a) < F.col(key_b))\n"
+        "b = (l.join(r, ['_bkey', *by])\n"
+        "     .filter((F.col('a') < F.col('b')) & (F.col('x') >= 1)))\n"
+        "c = l.join(r, F.col('id_a') < F.col('id_b')).where(F.col('a') < F.col('b'))\n"
+        "d = l.join(r, 'k').where(F.col('a') != F.col('b'))\n"
+        "def bucket_pairs(df):\n"
+        "    return l.join(r, 'k').where(F.col('a') < F.col('b'))\n"
+    )
+    assert _pair_order_filters(tree) == [1, 2]
