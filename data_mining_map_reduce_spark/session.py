@@ -4,7 +4,8 @@ Local testing runs on ``local[N]``; the same config block is what we
 would ship to a 1000-executor cluster: AQE (runtime coalescing + skew
 join splitting), UTC session timezone (for oracle comparability),
 Arrow-enabled Python interop, shuffle partitions sized to the
-parallelism at hand rather than the 200 default.
+parallelism at hand rather than the 200 default (one count for batch
+plans, another for stateful streams; see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -38,10 +39,21 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     On a real cluster the ``master`` comes from spark-submit; here we
-    pin ``local[DEFAULT_CPUS]``. ``spark.sql.shuffle.partitions`` is
-    the core count, at least 8 — on a cluster you'd size it so
-    post-shuffle partitions land in the 64-256 MiB range (AQE
-    coalesces down). Python workers start through ``pydaemon``
+    pin ``local[DEFAULT_CPUS]``.
+
+    Shuffle partitions are split by plan kind. Batch plans run under
+    AQE coalescing, where Spark takes the pre-coalesce count from
+    ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``: the
+    core count, at least 8 (on a cluster, size it so post-shuffle
+    partitions land in the 64-256 MiB range; AQE coalesces down).
+    Stateful streams run with AQE off, so nothing coalesces them and
+    each shuffle partition is a state store with its own fixed cost
+    per micro-batch: ``spark.sql.shuffle.partitions`` is the core
+    count, one state store per core and one task wave. A stream
+    restarted from an existing checkpoint keeps the partition count
+    pinned in its offset log, whatever these settings say.
+
+    Python workers start through ``pydaemon``
     (``spark.python.daemon.module``), so each task imports the
     installed pyspark instead of re-scanning ``pyspark.zip``.
     """
@@ -54,9 +66,13 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(DEFAULT_CPUS, 8)))
+        .config("spark.sql.shuffle.partitions", str(DEFAULT_CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(max(DEFAULT_CPUS, 8)),
+        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -51,7 +51,9 @@ class ReservoirSampler:
         """ST6: foreachBatch callback feeding rows in a deterministic
         per-batch order (micro-batch content is deterministic under
         availableNow file replay; ordering within the batch must be
-        pinned for reproducibility).
+        pinned for reproducibility): by ``order_col``, ties broken by
+        the batch's remaining columns in schema order, so rows with
+        equal order values never feed in file order.
 
         ``batch_cap`` bounds the per-batch collect
         (``guards.local_rows``) — this sampler IS driver-side
@@ -65,7 +67,9 @@ class ReservoirSampler:
         ``keyed_reservoir``) is the unbounded-scale path."""
 
         def _fn(batch_df: DataFrame, batch_id: int) -> None:
-            ordered = batch_df.orderBy(order_col)
+            ordered = batch_df.orderBy(
+                order_col, *(c for c in batch_df.columns if c != order_col)
+            )
             rows = local_rows(ordered, batch_cap) if batch_cap > 0 else ordered.collect()
             if rows is None:
                 require(

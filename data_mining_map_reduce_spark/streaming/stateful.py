@@ -18,6 +18,10 @@ blake2b(key, n, seed) scaled to [0, 1) (stdlib hashlib; see
 so a replayed micro-batch (or a recomputed task) makes identical
 keep/evict decisions; rows are folded in (ts, item) order within each
 group-batch so arrival order is pinned under availableNow replay.
+A TIMESTAMP order column reaches the Python worker as epoch
+microseconds (``unix_micros``, bigint), so each key's fold order is
+one ``numpy.lexsort`` over two integer arrays; null order values fold
+last, ties among them broken by item as for any other order value.
 """
 
 from __future__ import annotations
@@ -25,9 +29,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 _MASK = (1 << 63) - 1
@@ -49,19 +56,17 @@ def _fold_batch(
     k: Any,
     n: int,
     items: list[int],
-    pdf: pd.DataFrame,
-    item_col: str,
-    order_col: str,
+    order: np.ndarray,
+    batch_items: np.ndarray,
     capacity: int,
     seed: int,
 ) -> int:
     """The per-key update rule: first ``capacity`` items fill the
     reservoir; the n-th item is kept with probability capacity/n,
     evicting a uniform slot (Assignment6/task3.py:52-60); randomness
-    hash-derived, rows folded in (order_col, item_col) order."""
-    pdf = pdf.sort_values([order_col, item_col])
-    for item in pdf[item_col]:
-        item = int(item)
+    hash-derived, ``batch_items`` folded in (order, item) order with
+    null (NaN) order values last."""
+    for item in batch_items[np.lexsort((batch_items, order))].tolist():
         n += 1
         if len(items) < capacity:
             items.append(item)
@@ -96,12 +101,18 @@ def keyed_reservoir(
         else:
             n, items = 0, []
         for pdf in pdfs:
-            n = _fold_batch(k, n, items, pdf, item_col, order_col, capacity, seed)
+            n = _fold_batch(
+                k, n, items, pdf[order_col].to_numpy(), pdf[item_col].to_numpy(),
+                capacity, seed,
+            )
         state.update((n, items))
         yield pd.DataFrame({key_col: [k], "n_seen": [n], "sample": [list(items)]})
 
+    order = F.col(order_col)
+    if isinstance(stream.schema[order_col].dataType, T.TimestampType):
+        order = F.unix_micros(order)
     return (
-        stream.select(key_col, item_col, order_col)
+        stream.select(key_col, item_col, order.alias(order_col))
         .groupBy(key_col)
         .applyInPandasWithState(
             update,

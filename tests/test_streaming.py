@@ -596,3 +596,162 @@ def test_sample_content_key_injective_multi_column(spark):
         _content_key_str(["x"], seed=7).alias("k")
     )
     assert one.collect()[0].k == "v|7"
+
+
+def _reference_fold(k, n, items, rows, capacity, seed):
+    """The documented keyed-reservoir rule, written out: rows sorted
+    by (order, item) with null orders last, then each one counted and
+    kept or not in turn."""
+    from data_mining_map_reduce_spark.streaming.stateful import _u01
+
+    items = list(items)
+    for _, item in sorted(rows, key=lambda r: (r[0] is None, r[0] or 0, r[1])):
+        n += 1
+        if len(items) < capacity:
+            items.append(item)
+        elif _u01(k, n, seed, "keep") < capacity / n:
+            items[int(_u01(k, n, seed, "slot") * capacity)] = item
+    return n, items
+
+
+def _random_rows(rng, n_rows):
+    """(order, item) rows in random arrival order, drawing the epoch
+    microsecond orders from n_rows // 4 values (at least one), so any
+    two or more rows share orders and the item has to break the ties."""
+    base = 1_700_000_000_000_000
+    orders = rng.integers(base, base + max(1, n_rows // 4), n_rows)
+    items = rng.choice(10**9, n_rows, replace=False)
+    return [(int(o), int(i)) for o, i in zip(orders, items)]
+
+
+def _fold(k, n, items, rows, capacity, seed):
+    import numpy as np
+
+    from data_mining_map_reduce_spark.streaming.stateful import _fold_batch
+
+    items = list(items)
+    order = np.array([np.nan if o is None else o for o, _ in rows])
+    if not np.isnan(order).any():
+        order = order.astype(np.int64)
+    n = _fold_batch(
+        k, n, items, order, np.array([i for _, i in rows], dtype=np.int64),
+        capacity, seed,
+    )
+    return n, items
+
+
+def test_fold_batch_equals_sequential_reference():
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    for k in range(40):
+        rows = _random_rows(rng, int(rng.integers(1, 200)))
+        capacity = int(rng.integers(1, 20))
+        n0 = int(rng.integers(0, 50))
+        prior = [int(x) for x in rng.choice(10**9, min(n0, capacity), replace=False)]
+        assert _fold(k, n0, prior, rows, capacity, 7) == _reference_fold(
+            k, n0, prior, rows, capacity, 7
+        )
+
+
+def test_fold_batch_null_orders_fold_last():
+    """A null order value folds after every non-null one, nulls among
+    themselves by item. With capacity >= rows the sample is the fold
+    order itself."""
+    rows = [(None, 5), (20, 3), (None, 1), (20, 2), (10, 9), (None, 4)]
+    n, items = _fold(0, 0, [], rows, capacity=10, seed=7)
+    assert (n, items) == (6, [9, 2, 3, 1, 4, 5])
+    assert (n, items) == _reference_fold(0, 0, [], rows, capacity=10, seed=7)
+
+
+def test_keyed_reservoir_null_orders_fold_last(spark, tmp_path):
+    """End to end: a null ``ts`` reaches the Python fold as a null
+    order key and folds last, as ``test_fold_batch_null_orders_fold_last``
+    pins for ``_fold_batch``."""
+    from data_mining_map_reduce_spark.streaming.stateful import keyed_reservoir
+
+    path = str(tmp_path / "null_ts")
+    spark.createDataFrame(
+        [
+            (1, 5, None), (1, 3, "2024-01-02 00:00:00"), (1, 1, None),
+            (1, 2, "2024-01-02 00:00:00"), (1, 9, "2024-01-01 00:00:00"),
+            (2, 7, None),
+        ],
+        "user_id long, event_id long, ts string",
+    ).selectExpr("user_id", "event_id", "CAST(ts AS timestamp) ts").coalesce(
+        1
+    ).write.parquet(path)
+    stream = file_stream(
+        spark, path, "user_id long, event_id long, ts timestamp"
+    )
+    rows = run_stream_to_memory(
+        keyed_reservoir(stream, capacity=10), "reservoir_null_ts", "update"
+    )
+    assert {r.user_id: (r.n_seen, list(r.sample)) for r in rows} == {
+        1: (5, [9, 2, 3, 1, 5]),
+        2: (1, [7]),
+    }
+
+
+def test_fold_batch_chunked_equals_whole():
+    """Folding a batch at once equals folding it as consecutive chunks
+    of its fold order (each chunk in any arrival order) with the
+    count and sample carried between them, as micro-batches do."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    for k in range(20):
+        rows = _random_rows(rng, int(rng.integers(1, 300)))
+        capacity = int(rng.integers(1, 16))
+        whole = _fold(k, 0, [], rows, capacity, 7)
+        ordered = sorted(rows)
+        cuts = sorted(rng.choice(len(rows) + 1, int(rng.integers(1, 6))).tolist())
+        n, items = 0, []
+        for lo, hi in zip([0, *cuts], [*cuts, len(rows)]):
+            chunk = [ordered[i] for i in rng.permutation(range(lo, hi))]
+            n, items = _fold(k, n, items, chunk, capacity, 7)
+        assert (n, items) == whole
+
+
+def test_keyed_reservoir_samples_identical_across_shuffle_partitions(
+    spark, sf_dir, tmp_path
+):
+    """The state partition count a stream starts with must not move a
+    single sample: the fold is per key and its randomness hash-derived."""
+    from data_mining_map_reduce_spark.streaming.stateful import keyed_reservoir
+
+    path = _events_dir(spark, sf_dir, tmp_path)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    finals = []
+    try:
+        for parts in ("2", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            rows = run_stream_to_memory(
+                keyed_reservoir(file_stream(spark, path, TABLES["events"]), capacity=8),
+                f"reservoir_parts_{parts}",
+                output_mode="update",
+            )
+            final: dict[int, tuple] = {}
+            for r in rows:
+                if r.user_id not in final or r.n_seen > final[r.user_id][0]:
+                    final[r.user_id] = (r.n_seen, list(r.sample))
+            finals.append(final)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(finals[0]) > 0
+    assert finals[0] == finals[1]
+
+
+def test_reservoir_foreach_batch_breaks_order_ties_by_columns(spark):
+    """Rows tied on ``order_col`` feed in the order of the remaining
+    columns, not in file order: the planted ties below sit in file
+    order opposite to column order."""
+    batch = spark.createDataFrame(
+        [(1, 3, "c"), (1, 2, "b"), (1, 1, "a"), (0, 9, "z"), (1, 1, "0")],
+        "t long, x long, y string",
+    ).coalesce(1)
+    sampler = ReservoirSampler(capacity=10, seed=7)
+    sampler.foreach_batch("t")(batch, 0)
+    assert [tuple(r) for r in sampler.items] == [
+        (0, 9, "z"), (1, 1, "0"), (1, 1, "a"), (1, 2, "b"), (1, 3, "c"),
+    ]

@@ -202,6 +202,11 @@ def test_predictions_track_actuals(spark):
     assert all(0 < r.pred <= 50 for r in rows)
 
 
+# Under AQE coalescing a batch plan's shuffle partition count comes
+# from this setting, not from spark.sql.shuffle.partitions.
+_INITIAL_PARTS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
 def test_pearson_bit_identical_across_shuffle_partitions(spark):
     """r10 verdict task 1 gate: the suffstat Pearson family must be
     BIT-identical under different partitionings. covar/stddev (and
@@ -213,17 +218,17 @@ def test_pearson_bit_identical_across_shuffle_partitions(spark):
     partitioning must not move a single bit of output."""
     from data_mining_map_reduce_spark.queries import SPARK_QUERIES
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    prev = spark.conf.get(_INITIAL_PARTS)
     runs = []
     try:
         for parts in ("2", "8", "32"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            spark.conf.set(_INITIAL_PARTS, parts)
             rows = SPARK_QUERIES["cf_item_similarities"](
                 spark, "/root/testdata/sf0.001"
             ).collect()
             runs.append([(r.i1, r.i2, r.sim, r.n_co) for r in rows])
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(_INITIAL_PARTS, prev)
     assert len(runs[0]) > 0
     # exact equality — floats included; any ulp drift is a failure
     assert runs[0] == runs[1] == runs[2]
@@ -234,17 +239,17 @@ def test_prediction_bit_identical_across_shuffle_partitions(spark):
     (Σ(sim_e6·r_e6)/Σ(sim_e6) with floor-quantization)."""
     from data_mining_map_reduce_spark.queries import SPARK_QUERIES
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    prev = spark.conf.get(_INITIAL_PARTS)
     runs = []
     try:
         for parts in ("2", "32"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            spark.conf.set(_INITIAL_PARTS, parts)
             rows = SPARK_QUERIES["cf_predictions"](
                 spark, "/root/testdata/sf0.001"
             ).collect()
             runs.append([(r.u, r.i, r.pred) for r in rows])
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(_INITIAL_PARTS, prev)
     assert len(runs[0]) > 0
     assert runs[0] == runs[1]
 
