@@ -6,6 +6,14 @@ join splitting), UTC session timezone (for oracle comparability),
 Arrow-enabled Python interop, shuffle partitions sized to the
 parallelism at hand rather than the 200 default (one count for batch
 plans, another for stateful streams; see ``get_spark``).
+
+Streaming checkpoints are written through Hadoop's ``FileSystem`` API
+rather than Spark's ``FileContext`` default: without libhadoop, each
+FileContext rename forks ``readlink`` (``RawLocalFileSystem.getFileLinkStatus``
+→ ``FileUtil.readLink``), about 3 ms a fork on the micro-batch's
+critical path, where ``FileSystem.rename`` on ``file://`` is a plain
+``java.io.File.renameTo``. The ``chmod`` forks that remain are known;
+see ``get_spark``.
 """
 
 from __future__ import annotations
@@ -26,6 +34,11 @@ def _host_heap() -> str:
         kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
     return f"{min(16, max(1, int(0.4 * kb / (1024 * 1024))))}g"
 
+
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 # Workers start the daemon module by name, so they need the directory
 # that holds the engine package on their path, wherever the driver runs.
@@ -56,6 +69,21 @@ def get_spark(
     Python workers start through ``pydaemon``
     (``spark.python.daemon.module``), so each task imports the
     installed pyspark instead of re-scanning ``pyspark.zip``.
+
+    Checkpoints go through ``FileSystemBasedCheckpointFileManager``
+    (``spark.sql.streaming.checkpointFileManagerClass``). Spark's
+    ``FileContext`` default renames each atomic checkpoint write
+    through ``AbstractFileSystem.renameInternal``, which without
+    libhadoop execs ``readlink`` once per file link lookup: 8 forks per
+    checkpoint file, 112 per ``keyed_reservoir`` pass of the stream
+    benchmark. On ``file://`` the FileSystem manager renames with
+    ``java.io.File.renameTo`` after the same does-the-target-exist
+    check, so atomicity, no-overwrite semantics and the checkpoint
+    layout (``.crc`` files included) are unchanged, and a checkpoint
+    written under the default resumes under this manager. The
+    remaining known forks are ``chmod`` from
+    ``RawLocalFileSystem.setPermission`` (41 a pass), which only a
+    file system class overriding ``setPermission`` would remove.
     """
     extra_conf = dict(extra_conf or {})
     worker_pythonpath = os.pathsep.join(
@@ -78,6 +106,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.daemon.module", "data_mining_map_reduce_spark.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
+        )
         # At most 16g: huge-hash-state operators slow down as the heap
         # grows (SCALE.md "64g-heap cliff").
         .config(

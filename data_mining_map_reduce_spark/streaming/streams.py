@@ -164,7 +164,9 @@ def foreach_batch_sink(
     """ST5: ``foreachBatch`` sink — per-micro-batch callback
     ``batch_fn(batch_df, batch_id)``, the engine's answer to
     ``foreachRDD`` (reference Assignment6/task2.py:91). Returns the
-    StreamingQuery (caller awaits/stops)."""
+    StreamingQuery (caller awaits/stops). The checkpoint is written
+    through the manager ``session.get_spark`` pins
+    (``FileSystemBasedCheckpointFileManager``)."""
     writer = agg.writeStream.outputMode(output_mode).foreachBatch(batch_fn)
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)

@@ -1,15 +1,20 @@
 """Engine session defaults: batch plans shuffle into
 max(DEFAULT_CPUS, 8) partitions under AQE, stateful streams (AQE off)
-into one state partition per core."""
+into one state partition per core, and streaming checkpoints go
+through Hadoop's FileSystem API."""
 
 from __future__ import annotations
 
 import os
 import re
 
+import pytest
+
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from data_mining_map_reduce_spark.session import DEFAULT_CPUS
+from data_mining_map_reduce_spark.session import CHECKPOINT_FILE_MANAGER, DEFAULT_CPUS
 from data_mining_map_reduce_spark.sources.catalog import TABLES, load_table
 from data_mining_map_reduce_spark.streaming.stateful import keyed_reservoir
 from data_mining_map_reduce_spark.streaming.streams import (
@@ -44,3 +49,54 @@ def test_batch_group_by_plans_initial_partition_num(spark):
     df = spark.range(100).withColumn("k", F.col("id") % 7).groupBy("k").count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert re.search(rf"hashpartitioning\(k#\d+L, {max(DEFAULT_CPUS, 8)}\)", plan), plan
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark, path, manager_class=None):
+    """``CheckpointFileManager.create`` for ``path`` under the session's
+    Hadoop conf, with the manager class overridden when given."""
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    assert isinstance(
+        pkg.CheckpointFileManager, JavaClass
+    ), f"no CheckpointFileManager in {pkg}"
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if manager_class is not None:
+        conf.set(_MANAGER_KEY, manager_class)
+    return pkg.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)), conf
+    )
+
+
+def test_checkpoint_file_manager_pinned(spark, tmp_path):
+    """The pinned class name must exist in this Spark: a release that
+    moves the package fails here instead of in every stream."""
+    assert spark.conf.get(_MANAGER_KEY) == CHECKPOINT_FILE_MANAGER
+    got = _checkpoint_manager(spark, tmp_path)
+    assert got.getClass().getName() == CHECKPOINT_FILE_MANAGER
+
+
+@pytest.mark.parametrize(
+    "manager_class",
+    [
+        CHECKPOINT_FILE_MANAGER,
+        CHECKPOINT_FILE_MANAGER.replace("FileSystem", "FileContext"),
+    ],
+)
+def test_checkpoint_file_no_overwrite(spark, tmp_path, manager_class):
+    """Two writers of one checkpoint file, both open before either
+    closes (two runs of a query committing the same batch): the first
+    rename wins, the second fails and the file keeps the first write,
+    under the pinned manager as under Spark's FileContext default."""
+    fm = _checkpoint_manager(spark, tmp_path, manager_class)
+    assert fm.getClass().getName() == manager_class
+    target = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    first, second = fm.createAtomic(target, False), fm.createAtomic(target, False)
+    first.write(bytearray(b"first"))
+    second.write(bytearray(b"second"))
+    first.close()
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"first"

@@ -742,6 +742,76 @@ def test_keyed_reservoir_samples_identical_across_shuffle_partitions(
     assert finals[0] == finals[1]
 
 
+def test_keyed_reservoir_resumes_from_checkpoint(spark, sf_dir, tmp_path):
+    """A stream stopped after one file and restarted on the same
+    checkpoint with a second file ends with the samples of one
+    uninterrupted run over both: no key counted twice, no batch
+    replayed. The first run writes its checkpoint through Spark's
+    FileContext manager (the conf unset), so a checkpoint written
+    before ``get_spark`` pinned the FileSystem manager resumes under it."""
+    import os
+    import shutil
+    import time
+
+    from data_mining_map_reduce_spark.session import CHECKPOINT_FILE_MANAGER
+    from data_mining_map_reduce_spark.streaming.stateful import keyed_reservoir
+
+    events = load_table(spark, sf_dir, "events")
+    stamps = sorted(r.ts for r in events.where("ts IS NOT NULL").select("ts").collect())
+    cut = stamps[len(stamps) // 2]
+    early = F.coalesce(F.col("ts") <= cut, F.lit(False))  # null ts: second file
+    halves = [events.where(early), events.where(~early)]
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def add_file(i):
+        out = str(tmp_path / f"half{i}")
+        halves[i].coalesce(1).write.parquet(out)
+        (part,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        dst = str(src / f"events{i}.parquet")
+        shutil.move(os.path.join(out, part), dst)
+        mtime = time.time() + i  # the second file is strictly newer
+        os.utime(dst, (mtime, mtime))
+
+    def run(cp):
+        final: dict[int, tuple] = {}
+
+        def fn(df, _bid):
+            for r in df.collect():
+                final[r.user_id] = (r.n_seen, list(r.sample))
+
+        q = foreach_batch_sink(
+            keyed_reservoir(file_stream(spark, str(src), TABLES["events"]), capacity=8),
+            fn,
+            checkpoint_dir=str(cp),
+        )
+        q.awaitTermination()
+        assert q.exception() is None
+        return final
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    cp = tmp_path / "cp"
+    add_file(0)
+    prev = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        first = run(cp)
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+    assert spark.conf.get(key) == CHECKPOINT_FILE_MANAGER
+    add_file(1)
+    resumed = {**first, **run(cp)}
+    whole = run(tmp_path / "cp_whole")
+
+    counts = {
+        r.user_id: r["count"] for r in events.groupBy("user_id").count().collect()
+    }
+    assert {k: n for k, (n, _) in resumed.items()} == counts
+    assert resumed == whole
+    assert sorted(f for f in os.listdir(cp / "commits") if f.isdigit()) == ["0", "1"]
+
+
 def test_reservoir_foreach_batch_breaks_order_ties_by_columns(spark):
     """Rows tied on ``order_col`` feed in the order of the remaining
     columns, not in file order: the planted ties below sit in file
