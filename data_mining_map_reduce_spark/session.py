@@ -7,13 +7,16 @@ Arrow-enabled Python interop, shuffle partitions sized to the
 parallelism at hand rather than the 200 default (one count for batch
 plans, another for stateful streams; see ``get_spark``).
 
+Local file I/O forks no shell command. Without libhadoop, Hadoop execs
+a command wherever it would make a native call, about 3 ms a fork, on
+the micro-batch's critical path for streams and per file for writes.
 Streaming checkpoints are written through Hadoop's ``FileSystem`` API
-rather than Spark's ``FileContext`` default: without libhadoop, each
-FileContext rename forks ``readlink`` (``RawLocalFileSystem.getFileLinkStatus``
-→ ``FileUtil.readLink``), about 3 ms a fork on the micro-batch's
-critical path, where ``FileSystem.rename`` on ``file://`` is a plain
-``java.io.File.renameTo``. The ``chmod`` forks that remain are known;
-see ``get_spark``.
+rather than Spark's ``FileContext`` default, whose renames fork
+``readlink`` (``RawLocalFileSystem.getFileLinkStatus`` →
+``FileUtil.readLink``); ``FileSystem.rename`` on ``file://`` is a plain
+``java.io.File.renameTo``. And ``file://`` is served by
+``graft.hadoop.NioLocalFileSystem`` (``jvm/``), whose ``setPermission``
+calls java.nio where the stock one forks ``chmod``. See ``get_spark``.
 """
 
 from __future__ import annotations
@@ -34,6 +37,13 @@ def _host_heap() -> str:
         kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
     return f"{min(16, max(1, int(0.4 * kb / (1024 * 1024))))}g"
 
+
+# The file:// file system: Hadoop's LocalFileSystem with a fork-free
+# setPermission, built from jvm/src by jvm/build.sh.
+LOCAL_FS_CLASS = "graft.hadoop.NioLocalFileSystem"
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "graft-localfs.jar"
+)
 
 CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -80,43 +90,67 @@ def get_spark(
     ``java.io.File.renameTo`` after the same does-the-target-exist
     check, so atomicity, no-overwrite semantics and the checkpoint
     layout (``.crc`` files included) are unchanged, and a checkpoint
-    written under the default resumes under this manager. The
-    remaining known forks are ``chmod`` from
-    ``RawLocalFileSystem.setPermission`` (41 a pass), which only a
-    file system class overriding ``setPermission`` would remove.
+    written under the default resumes under this manager.
+
+    ``file://`` is ``LOCAL_FS_CLASS`` (``spark.hadoop.fs.file.impl``),
+    loaded from ``LOCAL_FS_JAR`` on the driver's class path (local-mode
+    tasks run in the driver JVM). Unpinned, ``file://`` resolves through
+    Hadoop's ServiceLoader registry to Hive's ``ProxyLocalFileSystem``
+    (hive-exec registers it after Hadoop's ``LocalFileSystem``, which
+    it wraps). Hadoop's ``mkdirs`` and ``create`` always pass a
+    permission, and without libhadoop the stock
+    ``RawLocalFileSystem.setPermission`` forks ``chmod`` for it: 41
+    forks per ``keyed_reservoir`` pass, about 18 per ``write_parquet``
+    of a 4-partition frame. The class sets the same 9 mode bits through
+    ``java.nio.file.Files.setPosixFilePermissions``, and hands a sticky
+    bit, a set-user/group-ID target, or a JVM with libhadoop to the
+    stock code. Callers apply the umask before ``setPermission``, and
+    both follow symlinks, so file modes, ``.crc`` files, renames and
+    the checkpoint layout are unchanged: a checkpoint written by an
+    unpinned session resumes under this one.
+
+    A caller's ``spark.executorEnv.PYTHONPATH`` or
+    ``spark.driver.extraClassPath`` in ``extra_conf`` is joined with the
+    engine's entry, not put in its place; any other ``extra_conf`` entry
+    wins over the default.
     """
+    builder = SparkSession.builder.master(f"local[{DEFAULT_CPUS}]").appName(app_name)
+    for k, v in _engine_conf(extra_conf).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def _engine_conf(extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """The settings ``get_spark`` builds its session with."""
     extra_conf = dict(extra_conf or {})
-    worker_pythonpath = os.pathsep.join(
-        p
-        for p in (extra_conf.pop("spark.executorEnv.PYTHONPATH", None), _ENGINE_PARENT)
-        if p
-    )
-    builder = (
-        SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(max(DEFAULT_CPUS, 8)),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.python.daemon.module", "data_mining_map_reduce_spark.pydaemon")
-        .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)
-        .config(
-            "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
-        )
+
+    def joined(key: str, ours: str) -> str:
+        return os.pathsep.join(p for p in (extra_conf.pop(key, None), ours) if p)
+
+    conf = {
+        "spark.sql.shuffle.partitions": str(DEFAULT_CPUS),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(
+            max(DEFAULT_CPUS, 8)
+        ),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.python.daemon.module": "data_mining_map_reduce_spark.pydaemon",
+        "spark.executorEnv.PYTHONPATH": joined(
+            "spark.executorEnv.PYTHONPATH", _ENGINE_PARENT
+        ),
+        "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FILE_MANAGER,
+        "spark.driver.extraClassPath": joined("spark.driver.extraClassPath", LOCAL_FS_JAR),
+        "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
         # At most 16g: huge-hash-state operators slow down as the heap
         # grows (SCALE.md "64g-heap cliff").
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_heap(),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_heap(),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # Scan-side partition sizing: 128 MiB splits keep one scan
         # task's working set well inside executor memory at any SF
         # (Spark's default, pinned explicitly because it is a scale
@@ -124,10 +158,6 @@ def get_spark(
         # tasks, the right granularity for 1000 executors; raise it
         # only for very wide rows, lower it for heavy per-row decode
         # like the multimodal UDFs).
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-    )
-    for k, v in extra_conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    }
+    return {**conf, **extra_conf}

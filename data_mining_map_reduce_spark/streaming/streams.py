@@ -165,8 +165,11 @@ def foreach_batch_sink(
     ``batch_fn(batch_df, batch_id)``, the engine's answer to
     ``foreachRDD`` (reference Assignment6/task2.py:91). Returns the
     StreamingQuery (caller awaits/stops). The checkpoint is written
-    through the manager ``session.get_spark`` pins
-    (``FileSystemBasedCheckpointFileManager``)."""
+    through the manager and the ``file://`` file system that
+    ``session.get_spark`` pins (``FileSystemBasedCheckpointFileManager``,
+    ``graft.hadoop.NioLocalFileSystem``), so without libhadoop a
+    micro-batch forks neither ``readlink`` for its renames nor ``chmod``
+    for its new files and directories."""
     writer = agg.writeStream.outputMode(output_mode).foreachBatch(batch_fn)
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)

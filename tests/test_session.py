@@ -1,7 +1,7 @@
 """Engine session defaults: batch plans shuffle into
 max(DEFAULT_CPUS, 8) partitions under AQE, stateful streams (AQE off)
-into one state partition per core, and streaming checkpoints go
-through Hadoop's FileSystem API."""
+into one state partition per core, streaming checkpoints go through
+Hadoop's FileSystem API, and ``file://`` is the engine's file system."""
 
 from __future__ import annotations
 
@@ -14,7 +14,13 @@ from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from data_mining_map_reduce_spark.session import CHECKPOINT_FILE_MANAGER, DEFAULT_CPUS
+from data_mining_map_reduce_spark.session import (
+    CHECKPOINT_FILE_MANAGER,
+    DEFAULT_CPUS,
+    LOCAL_FS_CLASS,
+    LOCAL_FS_JAR,
+    _engine_conf,
+)
 from data_mining_map_reduce_spark.sources.catalog import TABLES, load_table
 from data_mining_map_reduce_spark.streaming.stateful import keyed_reservoir
 from data_mining_map_reduce_spark.streaming.streams import (
@@ -100,3 +106,39 @@ def test_checkpoint_file_no_overwrite(spark, tmp_path, manager_class):
     with pytest.raises(Py4JJavaError, match="already exists"):
         second.close()
     assert (tmp_path / "0").read_bytes() == b"first"
+
+
+def test_local_file_system_pinned(spark):
+    """The session serves ``file://`` with the engine's class, loaded
+    from the jar on the driver's class path."""
+    assert spark.conf.get("spark.hadoop.fs.file.impl") == LOCAL_FS_CLASS
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.driver.extraClassPath") == LOCAL_FS_JAR
+    jvm = spark._jvm
+    class_path = jvm.System.getProperty("java.class.path").split(os.pathsep)
+    assert LOCAL_FS_JAR in class_path
+    for hadoop_conf in (
+        spark._jsc.hadoopConfiguration(),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    ):
+        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), hadoop_conf)
+        assert fs.getClass().getName() == LOCAL_FS_CLASS
+        assert fs.getRaw().getClass().getName() == LOCAL_FS_CLASS + "$Raw"
+
+
+def test_extra_conf_paths_join_engine_entries():
+    """A caller's class path or worker path is joined with the engine's,
+    so ``fs.file.impl`` never names a class that is off the class path;
+    every other setting the caller passes wins."""
+    conf = _engine_conf(
+        {
+            "spark.driver.extraClassPath": "/opt/a.jar",
+            "spark.executorEnv.PYTHONPATH": "/opt/py",
+            "spark.ui.enabled": "true",
+        }
+    )
+    assert conf["spark.driver.extraClassPath"] == os.pathsep.join(["/opt/a.jar", LOCAL_FS_JAR])
+    assert conf["spark.executorEnv.PYTHONPATH"].startswith("/opt/py" + os.pathsep)
+    assert conf["spark.hadoop.fs.file.impl"] == LOCAL_FS_CLASS
+    assert conf["spark.ui.enabled"] == "true"
+    assert _engine_conf(None)["spark.driver.extraClassPath"] == LOCAL_FS_JAR
